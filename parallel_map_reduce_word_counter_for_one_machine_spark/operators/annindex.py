@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import query
+from ..session import session_artifact
 from .similarity import (
     _IVF_VERDICT_ORACLE,
     _recall_verdict,
@@ -657,22 +658,20 @@ def _heal_delete_swap(index_root: str) -> None:
     shutil.rmtree(staged, ignore_errors=True)
 
 
-# One built index per (session, sf_dir, quantizer) — build is the one-off
-# ingest step, same lifecycle pattern as sources/partitioned.py / bucketed.py.
-_BUILT: dict[tuple[str, str, object], str] = {}
-
-
 def ivfpq_index_dir(
     spark: SparkSession, sf_dir: str, n_cells: int | None = None
 ) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir, n_cells)
-    if key not in _BUILT:
+    """One built index per (session, sf_dir, quantizer) — build is the
+    one-off ingest step."""
+
+    def build() -> str:
         base = tempfile.mkdtemp(
             prefix="pmrwc_ivfpq_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
         )
         build_ivfpq_index(spark, sf_dir, base, n_cells=n_cells)
-        _BUILT[key] = base
-    return _BUILT[key]
+        return base
+
+    return session_artifact(spark, ("ivfpq_index", sf_dir, n_cells), build)
 
 
 def probed_codes_scan(
@@ -865,8 +864,8 @@ def _appended_index_dir(spark: SparkSession, sf_dir: str) -> str:
     grown to full size through ``append_to_ivfpq_index`` — the corpus the
     appended-maintenance verdict probes. Cached per session like the
     build-once indexes."""
-    key = (spark.sparkContext.applicationId, sf_dir, "appended")
-    if key not in _BUILT:
+
+    def build() -> str:
         base = tempfile.mkdtemp(
             prefix="pmrwc_ivfpq_app_"
             + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
@@ -875,8 +874,9 @@ def _appended_index_dir(spark: SparkSession, sf_dir: str) -> str:
         in_base = F.pmod(F.xxhash64(F.col("vec_id")), F.lit(2)) == 0
         build_ivfpq_index(spark, sf_dir, base, vecs=vecs.filter(in_base))
         append_to_ivfpq_index(spark, vecs.filter(~in_base), base)
-        _BUILT[key] = base
-    return _BUILT[key]
+        return base
+
+    return session_artifact(spark, ("ivfpq_appended", sf_dir), build)
 
 
 @query("similarity_topk_ivfpq_appended", oracle=_IVF_VERDICT_ORACLE)
@@ -1120,13 +1120,15 @@ def stream_append_to_index(
     return verdicts
 
 
-def _stream_appended_index_dir(spark: SparkSession, sf_dir: str) -> str:
+def _stream_appended_index(
+    spark: SparkSession, sf_dir: str
+) -> tuple[str, list[dict]]:
     """Index built on the hash-half base, then grown to full size by the
-    STREAMING append path (one micro-batch per staged file). Cached per
-    session like the other build-once indexes; the drift verdicts of the
-    build are kept alongside for the tests."""
-    key = (spark.sparkContext.applicationId, sf_dir, "stream_appended")
-    if key not in _BUILT:
+    STREAMING append path (one micro-batch per staged file), with the
+    per-micro-batch drift verdicts of that ingest. Cached per session like
+    the other build-once indexes."""
+
+    def build() -> tuple[str, list[dict]]:
         base = tempfile.mkdtemp(
             prefix="pmrwc_ivfpq_strm_"
             + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
@@ -1134,16 +1136,9 @@ def _stream_appended_index_dir(spark: SparkSession, sf_dir: str) -> str:
         vecs = _vectors(spark, sf_dir)
         in_base = F.pmod(F.xxhash64(F.col("vec_id")), F.lit(2)) == 0
         build_ivfpq_index(spark, sf_dir, base, vecs=vecs.filter(in_base))
-        STREAM_APPEND_VERDICTS[(spark.sparkContext.applicationId, sf_dir)] = (
-            stream_append_to_index(spark, sf_dir, base)
-        )
-        _BUILT[key] = base
-    return _BUILT[key]
+        return base, stream_append_to_index(spark, sf_dir, base)
 
-
-# (appId, sf_dir) → per-micro-batch drift verdicts from the last stream
-# ingest; inspected by tests, not part of the registered relation.
-STREAM_APPEND_VERDICTS: dict[tuple[str, str], list[dict]] = {}
+    return session_artifact(spark, ("ivfpq_stream_appended", sf_dir), build)
 
 
 @query("stream_index_append", oracle=_IVF_VERDICT_ORACLE)
@@ -1157,6 +1152,6 @@ def stream_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     (union semantics), which is exactly what this verdict re-proves."""
     exact = similarity_topk(spark, sf_dir).select("query_id", "cand_id")
     approx = ivfpq_pruned_topk_listing(
-        spark, sf_dir, index_root=_stream_appended_index_dir(spark, sf_dir)
+        spark, sf_dir, index_root=_stream_appended_index(spark, sf_dir)[0]
     ).select("query_id", "cand_id")
     return _recall_verdict(exact, approx)

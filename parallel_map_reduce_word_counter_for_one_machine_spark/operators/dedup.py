@@ -2061,45 +2061,6 @@ def dedup_minhash_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 CONTAIN_DF_CAP = 16
 CONTAIN_T = 0.8  # containment(A→B) = |sh(A) ∩ sh(B)| / |sh(A)|
 
-# The last invocation's live shingle checkpoint (see hygiene note in
-# dedup_containment) — at most one entry.
-_CONTAIN_CKPTS: list = []
-
-
-# Hygiene policy for operators whose RETURNED plan references a
-# localCheckpoint (dedup_containment, decontaminate_bloom, knn_graph,
-# knn_graph_ivf): "drop" (default) frees the previous invocation's blocks
-# when the operator is invoked again; "keep" retains every invocation's
-# checkpoint for callers that compose multiple results into one plan.
-CKPT_HYGIENE = "drop"
-
-
-def _drop_prev_ckpt(slot: list, new_ckpt) -> None:
-    """Bounded checkpoint hygiene for operators whose RETURNED plan
-    references a localCheckpoint (so drop-on-exit — the train_bpe
-    doctrine — cannot apply): drop the PREVIOUS invocation's (by then
-    consumed) checkpoint from ``slot`` and track the new one, bounding
-    live orphan blocks at one table per operator no matter how many
-    times bench N_RUNS / a test session invoke the key.
-
-    AT-MOST-ONE-LIVE-RESULT CONTRACT (ADVICE r10): because local
-    checkpoints TRUNCATE lineage, dropping the previous checkpoint
-    invalidates the previously RETURNED DataFrame — a caller that holds
-    result #1, re-invokes the operator, and only then collects result #1
-    (or unions both results into one plan) would hit a runtime
-    'checkpoint block not found'. Each affected operator states this in
-    its public docstring. Composed-plan callers set
-    ``dedup.CKPT_HYGIENE = "keep"`` around their invocations to retain
-    every checkpoint (trading bounded storage growth for composability);
-    bench / driver / test usage is strictly invoke-then-consume, where
-    "drop" is both safe and required for storage hygiene."""
-    from .bpetrain import _drop_ckpt
-
-    if CKPT_HYGIENE != "keep":
-        while slot:
-            _drop_ckpt(slot.pop())
-    slot.append(new_ckpt)
-
 
 @query(
     "dedup_containment",
@@ -2162,11 +2123,8 @@ def dedup_containment(
     exactly the two docs of its pair, df=2 ≤ cap, so every such pair is
     always a candidate regardless of cap setting.
 
-    At-most-one-live-result: re-invoking this operator frees the previous
-    invocation's checkpoint, invalidating the previously returned
-    DataFrame — consume each result before the next call, or set
-    ``dedup.CKPT_HYGIENE = "keep"`` to compose invocations in one plan
-    (see ``_drop_prev_ckpt``).
+    The returned DataFrame owns its shingle checkpoint; Spark frees it
+    once the DataFrame is unreachable.
 
     ``docs`` overrides the table load for fixture-shaped tests."""
     docs = (
@@ -2191,11 +2149,6 @@ def dedup_containment(
         "doc_id",
         F.transform(_shingles(), lambda g: F.xxhash64(g)).alias("shingles"),
     ).localCheckpoint()
-    # Checkpoint hygiene (ADVICE r09): the RETURNED plan references this
-    # checkpoint, so it cannot be dropped on exit like train_bpe's — the
-    # deliberate exception to the drop-on-exit doctrine; see
-    # _drop_prev_ckpt.
-    _drop_prev_ckpt(_CONTAIN_CKPTS, sh)
     sd = sh.select("doc_id", F.explode("shingles").alias("g"))
     rare = (
         sd.groupBy("g")

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import ORACLES, query
+from ..session import session_artifact
 from ..sources.tables import load_table
 from .dedup import INCREMENTAL_MOD, dedup_ngram_jaccard, lsh_verified_pairs
 
@@ -173,22 +174,19 @@ def dedup_clusters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The standing cluster map is PERSISTED state in a real deployment — the
-# last run's output, not something a batch merge recomputes. One map per
-# (session, sf_dir), materialized once (localCheckpoint): the same
-# build-once lifecycle pattern as annindex._BUILT / sources/bucketed.py.
-_M0_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _standing_cluster_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _M0_CACHE:
+    """The standing cluster map is PERSISTED state in a real deployment —
+    the last run's output, not something a batch merge recomputes. One map
+    per (session, sf_dir), materialized once (localCheckpoint)."""
+
+    def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
         standing = docs.filter(F.col("doc_id") % INCREMENTAL_MOD != 0)
-        _M0_CACHE[key] = label_propagation(
+        return label_propagation(
             _sym_edges(lsh_verified_pairs(spark, sf_dir, docs=standing))
         ).localCheckpoint()
-    return _M0_CACHE[key]
+
+    return session_artifact(spark, ("standing_cluster_map", sf_dir), build)
 
 
 @query("dedup_clusters_incremental", oracle=_CC_ORACLE)

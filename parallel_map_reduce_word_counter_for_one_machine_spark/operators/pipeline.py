@@ -1099,10 +1099,6 @@ BLOOM_K = 2
 # needed (pyspark's shiftright only takes a Python-int shift amount).
 _POW2_MASKS = [(1 << j) if j < 63 else -(1 << 63) for j in range(64)]
 
-# The last invocation's live eval-shingle checkpoint (hygiene: see
-# dedup._drop_prev_ckpt) — at most one entry.
-_BLOOM_EV_CKPTS: list = []
-
 
 def _lit_long_array(values) -> "F.Column":
     """A long-array literal built with ONE py4j call (F.expr) instead of
@@ -1188,11 +1184,8 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     both verdict arms (bloom expression + exact broadcast left-join mark)
     ride the same exploded stream into a single per-doc aggregate.
 
-    At-most-one-live-result: re-invoking this operator frees the previous
-    invocation's eval-shingle checkpoint, invalidating the previously
-    returned DataFrame — consume each result before the next call, or set
-    ``dedup.CKPT_HYGIENE = "keep"`` to compose invocations in one plan
-    (see ``dedup._drop_prev_ckpt``)."""
+    The returned DataFrame owns its eval-shingle checkpoint; Spark frees it
+    once the DataFrame is unreachable."""
     from .dedup import _fan_out_small_input, _shingles
 
     docs = _fan_out_small_input(load_table(spark, sf_dir, "documents"))
@@ -1201,19 +1194,13 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # build of the exact rescue arm — so it is materialized once
     # (eval-suite-sized: the 5% slice's distinct shingles, the same
     # payload the broadcast ships anyway) instead of shingling the eval
-    # slice twice. Hygiene follows the dedup_containment convention: the
-    # returned plan references the checkpoint, so the PREVIOUS
-    # invocation's checkpoint is dropped here, bounding live blocks at
-    # one eval table.
-    from .dedup import _drop_prev_ckpt
-
+    # slice twice.
     ev = (
         docs.filter(F.col("doc_id") % DECONTAM_EVAL_MOD == 0)
         .select(F.explode(_shingles()).alias("g"))
         .distinct()
         .localCheckpoint()
     )
-    _drop_prev_ckpt(_BLOOM_EV_CKPTS, ev)
     pos_rows = (
         ev.select(
             F.explode(

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import query
+from ..session import session_artifact
 from ..sources.tables import load_table
 
 TOP_K = 10
@@ -718,35 +719,23 @@ def _train_subspace_codebooks(X, n_m: int = PQ_M, n_k: int = PQ_KSUB):
     return np.stack(books)  # (n_m, n_k, dsub)
 
 
-# One trained codebook tensor per (session, source): training is the
-# one-off ingest step of the PQ lifecycle (the annindex persisted-index
-# pattern, in-memory form) — the deterministic sample and k-means give
-# the same tensor on every call, so re-deriving it per query re-ran
-# ~1.1 s of driver-side work per probe for an identical result.
-_PQ_BOOKS: dict = {}
-
-
-def _pq_codebooks(vecs: DataFrame, cache_key: tuple | None = None):
+def _pq_codebooks(vecs: DataFrame):
     """Train per-subspace codebooks on a BOUNDED deterministic sample
     (lowest vec_ids; at scale: a hash-sample with the same cap) —
     driver work is O(cap · dim · iters), independent of corpus size, like
     ``kmeans_centroids``' k×dim state. Vectors are L2-normalized before
     training so the quantizer approximates the unit sphere the cosine
-    scan operates on. ``cache_key`` (session + source identity) memoizes
-    the tensor — pass it wherever the input relation is the stable
-    embeddings table rather than an ad-hoc frame."""
+    scan operates on. Callers training on the embeddings table memoize
+    the tensor per session (``session_artifact``): training is the
+    one-off ingest step of the PQ lifecycle, and re-deriving the same
+    tensor per query re-ran ~1.1 s of driver-side work per probe."""
     import numpy as np
 
-    if cache_key is not None and cache_key in _PQ_BOOKS:
-        return _PQ_BOOKS[cache_key]
     rows = vecs.orderBy("vec_id").limit(PQ_TRAIN_CAP).select("v").collect()
     X = np.array([r.v for r in rows], dtype=np.float64)
     norms = np.linalg.norm(X, axis=1, keepdims=True)
     X = X[norms[:, 0] > 0] / norms[norms[:, 0] > 0]
-    books = _train_subspace_codebooks(X)
-    if cache_key is not None:
-        _PQ_BOOKS[cache_key] = books
-    return books
+    return _train_subspace_codebooks(X)
 
 
 def pq_topk_listing(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -768,8 +757,8 @@ def pq_topk_listing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
 
     vecs = _vectors(spark, sf_dir)
-    books = _pq_codebooks(
-        vecs, cache_key=(spark.sparkContext.applicationId, sf_dir)
+    books = session_artifact(
+        spark, ("pq_codebooks", sf_dir), lambda: _pq_codebooks(vecs)
     )  # (M, KSUB, dsub) — closed over, ~4 KB
     qrows = vecs.filter(F.col("vec_id") < N_QUERIES).collect()
     q_ids = np.array([r.vec_id for r in qrows])
@@ -906,8 +895,8 @@ def ivfpq_topk_listing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
 
     vecs = _vectors(spark, sf_dir)
-    books = _pq_codebooks(
-        vecs, cache_key=(spark.sparkContext.applicationId, sf_dir)
+    books = session_artifact(
+        spark, ("pq_codebooks", sf_dir), lambda: _pq_codebooks(vecs)
     )
     # coarse quantizer state: k×dim label centroids, driver-side
     crows = (
@@ -1026,9 +1015,6 @@ def similarity_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- All-pairs k-NN graph -----------------------------------------------------
 
 KNN_K = 5
-
-# The last invocation's live block checkpoint (hygiene: dedup._drop_prev_ckpt)
-_KNN_BLOCK_CKPTS: list = []
 
 # Exact k-NN graph relation in DuckDB — shared by knn_graph's hard value
 # oracle and the IVF variant's verdict oracle (which pins its exact-edge
@@ -1150,19 +1136,15 @@ def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     and tiles pair only adjacent cells — that scale path is measured by
     ``knn_graph_ivf`` below.
 
-    At-most-one-live-result: re-invoking this operator frees the previous
-    invocation's block checkpoint, invalidating the previously returned
-    DataFrame — consume each result before the next call, or set
-    ``dedup.CKPT_HYGIENE = "keep"`` to compose invocations in one plan
-    (see ``dedup._drop_prev_ckpt``)."""
-    from .dedup import _GEMM_BLOCKS, _drop_prev_ckpt
+    The returned DataFrame owns its block checkpoint; Spark frees it
+    once the DataFrame is unreachable."""
+    from .dedup import _GEMM_BLOCKS
 
     e = _vectors(spark, sf_dir).select("vec_id", "v")
     blocks = e.groupBy(
         (F.pmod(F.xxhash64("vec_id"), _GEMM_BLOCKS)).alias("blk")
     ).agg(F.collect_list(F.struct("vec_id", "v")).alias("rows"))
     blocks = blocks.localCheckpoint()  # two consumers (both tile sides)
-    _drop_prev_ckpt(_KNN_BLOCK_CKPTS, blocks)
     tiles = (
         blocks.alias("x")
         .join(blocks.alias("y"), F.lit(True))
@@ -1183,8 +1165,6 @@ def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 # regime real text embeddings operate in.
 KNN_IVF_NPROBE = 7
 
-_KNN_IVF_CKPTS: list = []
-
 
 def knn_graph_ivf_listing(
     spark: SparkSession, sf_dir: str, nprobe: int | None = None
@@ -1200,15 +1180,11 @@ def knn_graph_ivf_listing(
     centroids (cap-bounded: n_cells rows — the KMEANS_DRIVER_CAP
     doctrine).
 
-    At-most-one-live-result: re-invoking this operator frees the previous
-    invocation's cell checkpoint, invalidating the previously returned
-    DataFrame — consume each result before the next call, or set
-    ``dedup.CKPT_HYGIENE = "keep"`` to compose invocations in one plan
-    (see ``dedup._drop_prev_ckpt``)."""
+    The returned DataFrame owns its cell checkpoint; Spark frees it
+    once the DataFrame is unreachable."""
     import numpy as np
 
     from .annindex import KMEANS_TRAIN_PER_CELL
-    from .dedup import _drop_prev_ckpt
 
     vecs = _vectors(spark, sf_dir)
     # Quantizer trained on a KMEANS_TRAIN_PER_CELL-bounded subsample (r12,
@@ -1252,7 +1228,6 @@ def knn_graph_ivf_listing(
         F.collect_list(F.struct("vec_id", "v")).alias("rows")
     )
     blocks = blocks.localCheckpoint()  # two consumers (both tile sides)
-    _drop_prev_ckpt(_KNN_IVF_CKPTS, blocks)
     tiles = (
         F.broadcast(adj_df)
         .join(blocks.alias("x"), "cell_id")

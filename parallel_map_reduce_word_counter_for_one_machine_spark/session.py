@@ -37,8 +37,28 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 import os
+from typing import Callable, TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
+
+# Build-once artifacts (persisted indexes, staged layouts, trained
+# codebooks, standing maps), keyed by (applicationId, *key): the one-off
+# ingest step is paid once per Spark application, and a new session never
+# sees an artifact built against another session's state.
+_ARTIFACTS: dict[tuple, object] = {}
+
+
+def session_artifact(spark: SparkSession, key: tuple, build: Callable[[], T]) -> T:
+    """Return the artifact memoized under ``key`` for this Spark
+    application, calling ``build()`` to make it on first use. ``key``
+    names the artifact kind first, then its inputs, e.g.
+    ``("bucketed_pair", sf_dir)``."""
+    full = (spark.sparkContext.applicationId, *key)
+    if full not in _ARTIFACTS:
+        _ARTIFACTS[full] = build()
+    return _ARTIFACTS[full]  # type: ignore[return-value]
 
 
 def default_cpus() -> int:

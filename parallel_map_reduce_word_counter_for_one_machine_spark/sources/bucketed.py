@@ -19,6 +19,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import query
+from ..session import session_artifact
 from .tables import load_table
 
 N_BUCKETS = 8
@@ -61,19 +62,17 @@ def bucketed_join(spark: SparkSession, o_name: str, l_name: str) -> DataFrame:
     )
 
 
-# One bucketed layout per (session, sf_dir): the write is the one-off
-# index-build step, exactly like a real warehouse pays the bucketing
-# shuffle once at ingest and then never again.
-_BUILT: dict[tuple[str, str], tuple[str, str]] = {}
-
-
 def bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BUILT:
+    """One bucketed layout per (session, sf_dir): the write is the one-off
+    index-build step, exactly like a real warehouse pays the bucketing
+    shuffle once at ingest and then never again."""
+
+    def build() -> tuple[str, str]:
         base = tempfile.mkdtemp(prefix="pmrwc_buckets_")
         suffix = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        _BUILT[key] = write_bucketed_pair(spark, sf_dir, base, suffix)
-    return _BUILT[key]
+        return write_bucketed_pair(spark, sf_dir, base, suffix)
+
+    return session_artifact(spark, ("bucketed_pair", sf_dir), build)
 
 
 @query(

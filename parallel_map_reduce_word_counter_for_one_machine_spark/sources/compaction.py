@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
+from ..session import session_artifact
 from .tables import load_table
 
 DEFAULT_TARGET_BYTES = 128 << 20  # the classic HDFS-block-ish target
@@ -71,15 +72,14 @@ def compact_parquet(
     return n
 
 
-# One fragmented→compacted layout per (session, sf_dir); the fragmented
-# write simulates a streaming sink's small-file debris.
-_BUILT: dict[tuple[str, str], tuple[str, str]] = {}
 FRAGMENT_FILES = 64
 
 
 def compacted_documents_dir(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BUILT:
+    """One fragmented→compacted layout per (session, sf_dir); the
+    fragmented write simulates a streaming sink's small-file debris."""
+
+    def build() -> tuple[str, str]:
         base = tempfile.mkdtemp(
             prefix="pmrwc_compact_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
         )
@@ -88,8 +88,9 @@ def compacted_documents_dir(spark: SparkSession, sf_dir: str) -> tuple[str, str]
             FRAGMENT_FILES
         ).write.mode("overwrite").parquet(frag)
         compact_parquet(spark, frag, compact)
-        _BUILT[key] = (frag, compact)
-    return _BUILT[key]
+        return frag, compact
+
+    return session_artifact(spark, ("compacted_documents", sf_dir), build)
 
 
 @query(

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
+from ..session import session_artifact
 from .tables import load_table
 
 
@@ -58,18 +59,15 @@ def read_evolved(spark: SparkSession, root: str) -> DataFrame:
     return spark.read.option("mergeSchema", "true").parquet(*batches)
 
 
-_BUILT: dict[tuple[str, str], str] = {}
-
-
 def evolved_documents_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BUILT:
+    def build() -> str:
         base = tempfile.mkdtemp(
             prefix="pmrwc_evolve_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
         )
         write_evolving_batches(spark, sf_dir, base)
-        _BUILT[key] = base
-    return _BUILT[key]
+        return base
+
+    return session_artifact(spark, ("evolved_documents", sf_dir), build)
 
 
 @query(

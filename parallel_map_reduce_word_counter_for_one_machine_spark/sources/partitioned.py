@@ -17,6 +17,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import query
+from ..session import session_artifact
 from .tables import load_table
 
 
@@ -38,20 +39,18 @@ def read_language(spark: SparkSession, out_dir: str, lang: str) -> DataFrame:
     return spark.read.parquet(out_dir).filter(f"lang = '{lang}'")
 
 
-# One partitioned layout per (session, sf_dir) — the write is the one-off
-# ingest step, like the bucketed layout in bucketed.py.
-_BUILT: dict[tuple[str, str], str] = {}
-
-
 def partitioned_documents_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BUILT:
+    """One partitioned layout per (session, sf_dir) — the write is the
+    one-off ingest step, like the bucketed layout in bucketed.py."""
+
+    def build() -> str:
         base = tempfile.mkdtemp(
             prefix="pmrwc_part_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
         )
         write_partitioned_documents(spark, sf_dir, base)
-        _BUILT[key] = base
-    return _BUILT[key]
+        return base
+
+    return session_artifact(spark, ("partitioned_documents", sf_dir), build)
 
 
 # Tiny lang→family dim for the dynamic-partition-pruning join. Hard-coded

@@ -48,21 +48,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
+from ..session import session_artifact
 from ..sources.tables import SCHEMAS, load_table
 from . import drain
 
 LATE_WATERMARK = "1 hour"
 
-_STAGED: dict[tuple[str, str], str] = {}
-
 
 def stage_late_slices(spark: SparkSession, sf_dir: str) -> str:
     """Write the three event-time slices as one parquet file each with
     ascending mtimes (the file source delivers oldest-mtime first, one
-    file per trigger) — batch 2 is the late cohort."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _STAGED:
-        return _STAGED[key]
+    file per trigger) — batch 2 is the late cohort. Staged once per
+    (session, sf_dir)."""
+    return session_artifact(
+        spark, ("late_slices", sf_dir), lambda: _write_late_slices(spark, sf_dir)
+    )
+
+
+def _write_late_slices(spark: SparkSession, sf_dir: str) -> str:
     evs = load_table(spark, sf_dir, "events")
     b = evs.agg(
         F.date_trunc("hour", F.min("ts")).alias("t0"),
@@ -88,7 +91,6 @@ def stage_late_slices(spark: SparkSession, sf_dir: str) -> str:
         shutil.move(os.path.join(tmp, part), dst)
         shutil.rmtree(tmp)
         os.utime(dst, (now + i * 10, now + i * 10))
-    _STAGED[key] = staged
     return staged
 
 

@@ -15,7 +15,7 @@ SF_CORRECT = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="pmr-wc-spark-tests", cpus=8, shuffle_partitions=8)
+    s = get_spark(app_name="pmr-wc-spark-tests", shuffle_partitions=8)
     yield s
 
 

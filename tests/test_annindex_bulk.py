@@ -22,10 +22,12 @@ from parallel_map_reduce_word_counter_for_one_machine_spark.operators.annindex i
     build_ivfpq_index,
     ivfpq_pruned_topk_listing,
 )
-from parallel_map_reduce_word_counter_for_one_machine_spark.operators import annindex
 from parallel_map_reduce_word_counter_for_one_machine_spark.operators.similarity import (
     ANN_RECALL_BOUND,
     similarity_topk,
+)
+from parallel_map_reduce_word_counter_for_one_machine_spark.session import (
+    session_artifact,
 )
 
 N_VECS = 50_000
@@ -95,10 +97,10 @@ def test_sqrt_n_cells_prune_to_single_digit_percent(spark, bulk_dir, tmp_path):
     frac = BULK_PROBE / len(cell_dirs)
     assert frac < 0.1, frac  # single-digit-percent scan per query
 
-    # register the built index under the module cache so the probe reuses
-    # it instead of rebuilding
-    key = (spark.sparkContext.applicationId, bulk_dir, BULK_CELLS)
-    annindex._BUILT[key] = index_root
+    # register the built index as the session's artifact so the probe
+    # reuses it instead of rebuilding
+    key = ("ivfpq_index", bulk_dir, BULK_CELLS)
+    assert session_artifact(spark, key, lambda: index_root) == index_root
 
     # n_probe/shortlist are THE two recall knobs (FAISS): at 50 k vectors
     # the intra-cluster cosine gaps sit inside residual-PQ quantization

@@ -32,7 +32,7 @@ def test_stream_equals_batch_append(spark, sf_dir):
     grown by one batch append — frozen quantizers make the encode a pure
     function of the vector, so batching cannot matter. Also catches
     double-appends: a replayed batch would surface as duplicate vec_ids."""
-    stream_root = AI._stream_appended_index_dir(spark, sf_dir)
+    stream_root, _ = AI._stream_appended_index(spark, sf_dir)
     batch_root = AI._appended_index_dir(spark, sf_dir)
 
     def codes(root):
@@ -51,9 +51,7 @@ def test_stream_equals_batch_append(spark, sf_dir):
 
 
 def test_per_batch_drift_verdicts_collected(spark, sf_dir):
-    AI._stream_appended_index_dir(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    verdicts = AI.STREAM_APPEND_VERDICTS[key]
+    _, verdicts = AI._stream_appended_index(spark, sf_dir)
     assert 1 <= len(verdicts) <= 3
     for v in verdicts:
         assert v["drift_ratio"] > 0

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 from parallel_map_reduce_word_counter_for_one_machine_spark import registry
 from parallel_map_reduce_word_counter_for_one_machine_spark.operators import (
     dedup as D,
+    pipeline as P,
     similarity as S,
 )
 
@@ -894,43 +895,66 @@ def test_containment_embedded_needle_recall_is_one(spark, sf_correct):
     assert all(by_pair[p] == 1.0 for p in expected)
 
 
-def test_ckpt_hygiene_keep_composes_two_invocations(spark):
-    """ADVICE r10 (checkpoint contract): by default re-invoking a
-    checkpoint-returning operator invalidates the previous result
-    (at-most-one-live-result — documented in the operator docstrings);
-    ``dedup.CKPT_HYGIENE = "keep"`` is the composed-plan escape hatch.
-    Prove the keep path: two invocations unioned into ONE plan and
-    collected AFTER both ran — exactly the access pattern that would die
-    with 'checkpoint block not found' if the first invocation's blocks
-    had been dropped."""
-    from parallel_map_reduce_word_counter_for_one_machine_spark.operators import dedup
-    from parallel_map_reduce_word_counter_for_one_machine_spark.operators.bpetrain import (
-        _drop_ckpt,
-    )
-
+def _three_docs(spark):
     rows = [
         (1, "alpha beta gamma delta epsilon zeta"),
         (2, "alpha beta gamma delta epsilon zeta eta theta"),
         (3, "iota kappa lambda mu nu xi"),
     ]
-    docs = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    old = dedup.CKPT_HYGIENE
-    # the slot may hold one (consumed) checkpoint from an earlier test in
-    # this session — that is the documented steady state; measure GROWTH
-    n0 = len(dedup._CONTAIN_CKPTS)
-    dedup.CKPT_HYGIENE = "keep"
-    try:
-        r1 = dedup.dedup_containment(spark, "unused", docs=docs)
-        r2 = dedup.dedup_containment(spark, "unused", docs=docs)
-        per = r2.count()
-        assert per >= 1  # doc 1 is contained in doc 2
-        # both results live in one composed plan
-        assert r1.unionAll(r2).count() == 2 * per
-        assert len(dedup._CONTAIN_CKPTS) == n0 + 2  # keep retained both
-    finally:
-        dedup.CKPT_HYGIENE = old
-        while dedup._CONTAIN_CKPTS:
-            _drop_ckpt(dedup._CONTAIN_CKPTS.pop())
+    return spark.createDataFrame(rows, "doc_id LONG, text STRING")
+
+
+# Operators whose RETURNED plan reads a localCheckpoint taken inside the call.
+CHECKPOINTED_RESULT_OPS = {
+    "dedup_containment": lambda spark, sf: D.dedup_containment(
+        spark, sf, docs=_three_docs(spark)
+    ),
+    "decontaminate_bloom": P.decontaminate_bloom,
+    "knn_graph": S.knn_graph,
+    "knn_graph_ivf_listing": S.knn_graph_ivf_listing,
+}
+
+
+@pytest.mark.parametrize("name", sorted(CHECKPOINTED_RESULT_OPS))
+def test_held_result_survives_a_second_call(spark, sf_dir, name):
+    """Each returned DataFrame owns its checkpoint: calling the operator
+    again must not invalidate a result the caller still holds. Collecting
+    the first result after the second call, alone and unioned with the
+    second into one plan, fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND if
+    the second call freed the first call's blocks."""
+    op = CHECKPOINTED_RESULT_OPS[name]
+    r1 = op(spark, sf_dir)
+    r2 = op(spark, sf_dir)
+    second = sorted(r2.collect(), key=repr)
+    assert len(second) >= 1
+    assert sorted(r1.collect(), key=repr) == second
+    assert r1.unionAll(r2).count() == 2 * len(second)
+
+
+def test_dropped_results_free_their_checkpoints(spark):
+    """Storage stays bounded without any module-level slot: once callers
+    drop the results, Spark's ContextCleaner frees their checkpoint blocks,
+    so five consumed calls leave at most one more live RDD behind."""
+    import gc
+    import time
+
+    jsc = spark.sparkContext._jsc.sc()
+    before = len(jsc.getRDDStorageInfo())
+    for _ in range(5):
+        result = D.dedup_containment(spark, "unused", docs=_three_docs(spark))
+        assert result.count() >= 1  # doc 1 is contained in doc 2
+    del result
+    deadline = time.monotonic() + 30
+    while True:
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        after = len(jsc.getRDDStorageInfo())
+        if after <= before + 1 or time.monotonic() > deadline:
+            break
+        time.sleep(1)
+    assert after <= before + 1, (
+        f"dropped results kept their checkpoints: {before} -> {after} RDDs"
+    )
 
 
 def test_containment_df_cap_filter_below_self_join(spark, sf_correct):

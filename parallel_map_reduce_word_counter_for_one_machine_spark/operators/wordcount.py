@@ -14,7 +14,10 @@ plans the physical strategy the reference hand-coded:
 - striped-lock merge   → ``Exchange hashpartitioning(word)`` + final agg —
   Spark's shuffle gives disjoint per-partition state, the sound version of
   the reference's racy striped-lock global map (src/main.cpp:118-138)
-- parallel merge sort  → range-partitioned ``orderBy`` (sampled boundaries)
+- parallel merge sort  → range-partitioned ``orderBy`` (sampled boundaries);
+  ``write_listings`` persists the aggregate for the duration of the call, so
+  the two listing sorts read one computed map, as the reference sorts its
+  one global map twice — the ``counts`` handed in stays lazy and uncached
 - ``word -> count``    → ``format_string`` projection
 
 Tokenizer parity (SURVEY.md §1, verified against the compiled reference):
@@ -284,26 +287,30 @@ def listing_lines(counts: DataFrame, order_cols, header: str | None) -> DataFram
     return head.unionByName(body).orderBy("_h", *order_cols).select("line")
 
 
-def write_listings(
-    spark: SparkSession, sf_dir: str, out_dir: str, headers: bool = True
-) -> None:
-    """Both reference sinks end-to-end: alpha listing → ``alpha/``, frequency
-    listing → ``by_count/`` (reference output.txt / output2.txt,
-    src/main.cpp:226-266), including the header lines (src/main.cpp:231,
-    :262) unless ``headers=False``. Distributed text write — one file per
-    partition; a 100 TB listing never funnels through the driver."""
-    wc = word_counts(spark, sf_dir)
-    (
-        listing_lines(wc, [F.asc("word")], ALPHA_HEADER if headers else None)
-        .write.mode("overwrite")
-        .text(f"{out_dir}/alpha")
+def write_listings(counts: DataFrame, out_dir: str, headers: bool = True) -> None:
+    """Both reference sinks from one ``word``/``cnt`` aggregate: alpha
+    listing → ``alpha/``, frequency listing → ``by_count/`` (reference
+    output.txt / output2.txt, src/main.cpp:226-266), including the header
+    lines (src/main.cpp:231, :262) unless ``headers=False``.
+
+    As the reference sorts its one global map twice (src/main.cpp:221-234,
+    :247-266), ``counts`` is persisted for the call so the scan, tokenize
+    and aggregate run once and both range sorts read the cached rows. The
+    cache holds one row per distinct word, not the corpus, and is released
+    before returning, so ``counts`` stays lazy and uncached. Distributed
+    text write — one file per partition; a 100 TB listing never funnels
+    through the driver."""
+    listings = (
+        ("alpha", [F.asc("word")], ALPHA_HEADER),
+        ("by_count", [F.desc("cnt"), F.asc("word")], BY_COUNT_HEADER),
     )
-    (
-        listing_lines(
-            wc,
-            [F.desc("cnt"), F.asc("word")],
-            BY_COUNT_HEADER if headers else None,
-        )
-        .write.mode("overwrite")
-        .text(f"{out_dir}/by_count")
-    )
+    cached = counts.persist()
+    try:
+        for name, order_cols, header in listings:
+            (
+                listing_lines(cached, order_cols, header if headers else None)
+                .write.mode("overwrite")
+                .text(f"{out_dir}/{name}")
+            )
+    finally:
+        cached.unpersist()

@@ -1,6 +1,7 @@
 """SparkSession construction tuned for the two regimes we care about:
 
-1. local[32] test/bench runs (this container), and
+1. local test/bench runs on one machine (``local[N]``, N = the machine's
+   cores unless ``SPARK_GRAFT_CPUS`` says otherwise), and
 2. the 1000-executor / 100 TB deployment the design targets.
 
 Only (1) is constructed here; (2) is documented so the same code ships
@@ -62,7 +63,7 @@ def session_artifact(spark: SparkSession, key: tuple, build: Callable[[], T]) ->
 
 
 def default_cpus() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 
 def get_spark(

@@ -4,7 +4,10 @@ The reference reads one UTF-8 text file line-by-line (ifstream+getline,
 reference src/main.cpp:104-108) and writes two full sorted listings
 (output.txt alphabetical, output2.txt by descending count,
 src/main.cpp:226-266). ``run_reference_pipeline`` is that whole program as
-one declarative Spark job.
+one declarative Spark plan. Like the reference, which builds its global
+map once and sorts it twice, each call scans, tokenizes and aggregates the
+text once: the aggregate is persisted while the two listings sort it, then
+released, so the ``counts`` the call returns is lazy and uncached.
 
 Scale: ``spark.read.text`` splits files by ``maxPartitionBytes`` — the
 built-in, correct version of the reference's BATCH_SIZE=2M-line
@@ -18,12 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.wordcount import (
-    ALPHA_HEADER,
-    BY_COUNT_HEADER,
-    REF_DELIM_REGEX,
-    listing_lines,
-)
+from ..operators.wordcount import REF_DELIM_REGEX, write_listings
 
 
 def read_text_lines(spark: SparkSession, path: str) -> DataFrame:
@@ -36,12 +34,13 @@ def run_reference_pipeline(
 ) -> DataFrame:
     """The reference program end-to-end (src/main.cpp:78-281), Spark-first:
 
-    text scan → reference-parity tokenize → groupBy count →
-    alpha listing → ``{out_dir}/alpha`` ; frequency listing →
-    ``{out_dir}/by_count``; returns the counts DataFrame. Header lines
-    match the reference byte-for-byte (src/main.cpp:231, :262) —
-    tests/test_textfile_stateful.py diffs the alpha listing against the
-    compiled reference binary's output.txt.
+    text scan → reference-parity tokenize → groupBy count, computed once
+    and persisted for the call → alpha listing → ``{out_dir}/alpha`` ;
+    frequency listing → ``{out_dir}/by_count`` (``write_listings``). Returns
+    the counts DataFrame as a lazy, uncached plan: the cache is released
+    before the call returns. Header lines match the reference byte-for-byte
+    (src/main.cpp:231, :262) — tests/test_binary_tokenizer.py diffs the
+    listings against the compiled reference binary's output.
 
     Difference by design (SURVEY.md §4): frequency ties are pinned to
     (cnt DESC, word ASC) where the reference is unstable-sort-unspecified.
@@ -53,18 +52,5 @@ def run_reference_pipeline(
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
     )
-    (
-        listing_lines(counts, [F.asc("word")], ALPHA_HEADER if headers else None)
-        .write.mode("overwrite")
-        .text(f"{out_dir}/alpha")
-    )
-    (
-        listing_lines(
-            counts,
-            [F.desc("cnt"), F.asc("word")],
-            BY_COUNT_HEADER if headers else None,
-        )
-        .write.mode("overwrite")
-        .text(f"{out_dir}/by_count")
-    )
+    write_listings(counts, out_dir, headers)
     return counts

@@ -2,8 +2,17 @@ from __future__ import annotations
 
 import pytest
 
+from py4j.protocol import Py4JJavaError
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
+from parallel_map_reduce_word_counter_for_one_machine_spark.operators.wordcount import (
+    word_counts,
+    write_listings,
+)
+from parallel_map_reduce_word_counter_for_one_machine_spark.sources.tables import (
+    load_table,
+)
 from parallel_map_reduce_word_counter_for_one_machine_spark.sources.textfile import (
     run_reference_pipeline,
 )
@@ -12,14 +21,84 @@ from parallel_map_reduce_word_counter_for_one_machine_spark.streaming.stateful i
 )
 
 
+CORPUS_LINES = ["Hello hello world-peace", "123abc O'Brien under_score", "Hello again"]
+
+
+def _write_corpus(tmp_path):
+    src = tmp_path / "corpus.txt"
+    src.write_text("".join(f"{line}\n" for line in CORPUS_LINES), encoding="utf-8")
+    return src
+
+
+def _scan_rows(spark, node_prefix: str, run) -> int:
+    """Rows output by the plan nodes whose name starts with ``node_prefix``,
+    summed over every SQL execution that ``run()`` starts, as Spark's SQL
+    status store records them."""
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def execution_ids():
+        return {e.executionId() for e in conv.asJava(store.executionsList())}
+
+    before = execution_ids()
+    run()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    rows = 0
+    for eid in execution_ids() - before:
+        values = conv.asJava(store.executionMetrics(eid))
+        for node in conv.asJava(store.planGraph(eid).allNodes()):
+            if not node.name().startswith(node_prefix):
+                continue
+            for m in conv.asJava(node.metrics()):
+                value = values.get(m.accumulatorId())
+                if m.name() == "number of output rows" and value:
+                    rows += int(value.replace(",", ""))
+    return rows
+
+
+def test_reference_pipeline_scans_text_once(spark, tmp_path):
+    """The reference builds its word map once and sorts it twice: both
+    listings must come from one scan of the input, not one scan each."""
+    src = _write_corpus(tmp_path)
+    out = str(tmp_path / "out")
+    rows = _scan_rows(
+        spark, "Scan text", lambda: run_reference_pipeline(spark, str(src), out)
+    )
+    assert rows == len(CORPUS_LINES)
+
+
+def test_write_listings_scans_documents_once(spark, sf_dir, tmp_path):
+    out = str(tmp_path / "out")
+    rows = _scan_rows(
+        spark, "Scan parquet", lambda: write_listings(word_counts(spark, sf_dir), out)
+    )
+    assert rows == load_table(spark, sf_dir, "documents").count()
+
+
+def test_reference_pipeline_releases_cache(spark, tmp_path):
+    """The aggregate is cached only while the two listings are written: the
+    returned counts is uncached, and a failing write releases it too."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    was_empty = cache.isEmpty()
+    src = _write_corpus(tmp_path)
+    counts = run_reference_pipeline(spark, str(src), str(tmp_path / "out"))
+    assert counts.storageLevel == StorageLevel.NONE
+    assert cache.lookupCachedData(counts._jdf).isEmpty()
+    assert cache.isEmpty() == was_empty
+
+    blocker = tmp_path / "regular_file"
+    blocker.write_text("not a directory", encoding="utf-8")
+    with pytest.raises(Py4JJavaError, match="ParentNotDirectoryException"):
+        run_reference_pipeline(spark, str(src), str(blocker / "out"))
+    # an equal plan would hit a leftover cache entry of the failed call
+    assert cache.lookupCachedData(counts._jdf).isEmpty()
+    assert cache.isEmpty() == was_empty
+
+
 def test_reference_pipeline_roundtrip(spark, tmp_path):
     """The reference program end-to-end on its own adversarial semantics:
     raw text in → two sorted listings out, counts verified by hand."""
-    src = tmp_path / "corpus.txt"
-    src.write_text(
-        "Hello hello world-peace\n123abc O'Brien under_score\nHello again\n",
-        encoding="utf-8",
-    )
+    src = _write_corpus(tmp_path)
     out = str(tmp_path / "out")
     counts = run_reference_pipeline(spark, str(src), out)
     got = {r.word: r.cnt for r in counts.collect()}

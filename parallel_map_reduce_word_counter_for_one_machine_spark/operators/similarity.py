@@ -344,8 +344,15 @@ def _assign_cells(
     relation, so no corpus-wide exchange belongs here): the centroid table
     is collected to the driver (k rows of dim floats — bounded by
     construction everywhere this is called, the KMEANS_DRIVER_CAP
-    doctrine) and the argmax becomes ``array_max`` over a k-element
-    literal struct array per row. The previous formulation crossJoined a
+    doctrine) and the argmax becomes ``array_max`` over ONE ``transform``
+    of a k-element literal array of (centroid, -cell_id) structs into
+    (sim, -cell_id) structs. One cosine lambda set scores every centroid,
+    so the plan — and the py4j round trips that build it — no longer
+    grows by a cosine per cell (pinned in tests/test_annindex.py::
+    test_assign_cells_literal_plan_does_not_grow_with_k); the struct order
+    and the arithmetic are those of the earlier form that built one
+    cosine per centroid, so assignments are unchanged. The pre-r11
+    formulation crossJoined a
     broadcast of cents and ran ``groupBy(vec_id).agg(max(struct(sim,
     -cell_id, v)))`` — map-side combine already produced one winner per
     vec_id per partition, so the hash exchange it fed (every corpus row,
@@ -397,16 +404,20 @@ def _assign_cells(
         return best.select(
             "vec_id", F.col("b.v").alias("v"), (-F.col("b.negc")).alias("cell_id")
         )
-    cands = F.array(
+    lits = F.array(
         *[
             F.struct(
-                cosine(
-                    F.col("v"), F.lit([float(x) for x in r.centroid])
-                ).alias("sim"),
+                F.lit([float(x) for x in r.centroid]).alias("c"),
                 F.lit(-int(r.cell_id)).cast("long").alias("negc"),
             )
             for r in crows
         ]
+    )
+    cands = F.transform(
+        lits,
+        lambda s: F.struct(
+            cosine(F.col("v"), s["c"]).alias("sim"), s["negc"].alias("negc")
+        ),
     )
     return vecs.select(
         "vec_id", "v", (-F.array_max(cands)["negc"]).alias("cell_id")
@@ -1032,19 +1043,41 @@ _KNN_EXACT_ORACLE = (
 )
 
 
+def _knn_rank(xid, X, yid, Y):
+    """The k-NN graph's one scoring and ordering convention, shared by the
+    exact tile kernel and the IVF cell kernel: float64 cosine of every
+    (x, y) pair rounded to 6dp, self-pairs and zero-norm vectors masked,
+    and each x row's first KNN_K columns under (cos desc, neighbor_id asc)
+    — lexsort keys apply last-first. Returns flat (vec_id, neighbor_id,
+    cos_sim, rank) arrays; masked pairs sort last, so ``rank`` counts
+    1..KNN_K over the unmasked pairs of each x row."""
+    import numpy as np
+
+    xn = np.linalg.norm(X, axis=1)
+    yn = np.linalg.norm(Y, axis=1)
+    denom = np.outer(np.where(xn > 0, xn, 1.0), np.where(yn > 0, yn, 1.0))
+    S = np.round((X @ Y.T) / denom, 6)
+    S[~np.outer(xn > 0, yn > 0) | np.equal.outer(xid, yid)] = -np.inf
+    k = min(KNN_K, S.shape[1])
+    order = np.lexsort((np.broadcast_to(yid, S.shape), -S), axis=1)[:, :k]
+    cos = np.take_along_axis(S, order, axis=1)
+    keep = cos != -np.inf
+    rank = np.broadcast_to(np.arange(1, k + 1, dtype=np.int64), order.shape)
+    vec = np.broadcast_to(xid[:, None], order.shape)
+    return vec[keep], yid[order][keep], cos[keep], rank[keep]
+
+
 def _knn_tile_topk(batches):
-    """mapInPandas kernel shared by the exact and IVF k-NN graphs: each
-    input row is one (xr rows, yr columns) tile; emit every x-row's LOCAL
-    top-KNN_K columns under the GLOBAL final ordering (6dp-rounded cosine
-    desc, neighbor_id asc — lexsort keys apply last-first), self-pairs and
-    zero-norm cosines excluded. Local-contains-global: a tile's top-k
-    under the exact final ordering is a superset of that tile's
-    contribution to the global top-k."""
+    """mapInPandas kernel of the exact k-NN graph: each input row is one
+    (xr rows, yr columns) tile; emit every x-row's LOCAL top-KNN_K columns
+    under the GLOBAL final ordering (``_knn_rank``). Local-contains-global:
+    a tile's top-k under the exact final ordering is a superset of that
+    tile's contribution to the global top-k."""
     import numpy as np
     import pandas as pd
 
     for pdf in batches:
-        out_i, out_j, out_c = [], [], []
+        out = []
         for xr, yr in zip(pdf["xr"], pdf["yr"]):
             if len(xr) == 0 or len(yr) == 0:
                 continue
@@ -1052,28 +1085,33 @@ def _knn_tile_topk(batches):
             X = np.array([r["v"] for r in xr], dtype=np.float64)
             yid = np.array([r["vec_id"] for r in yr], dtype=np.int64)
             Y = np.array([r["v"] for r in yr], dtype=np.float64)
-            xn = np.linalg.norm(X, axis=1)
-            yn = np.linalg.norm(Y, axis=1)
-            denom = np.outer(
-                np.where(xn > 0, xn, 1.0), np.where(yn > 0, yn, 1.0)
-            )
-            S = np.round((X @ Y.T) / denom, 6)
-            bad = ~np.outer(xn > 0, yn > 0) | np.equal.outer(xid, yid)
-            S[bad] = -np.inf
-            k = min(KNN_K, S.shape[1])
-            order = np.lexsort((np.broadcast_to(yid, S.shape), -S), axis=1)[
-                :, :k
-            ]
-            for r in range(S.shape[0]):
-                for c in order[r]:
-                    if S[r, c] == -np.inf:
-                        continue
-                    out_i.append(xid[r])
-                    out_j.append(yid[c])
-                    out_c.append(S[r, c])
+            out.append(_knn_rank(xid, X, yid, Y))
+        cols = [np.concatenate(c) for c in zip(*out)] if out else [[]] * 4
         yield pd.DataFrame(
-            {"vec_id": out_i, "neighbor_id": out_j, "cos_sim": out_c}
+            {"vec_id": cols[0], "neighbor_id": cols[1], "cos_sim": cols[2]}
         )
+
+
+def _knn_cell_topk(pdf):
+    """applyInPandas kernel of the IVF k-NN graph: one group is one cell's
+    x rows plus, as y rows, every row of the cells that cell probes, so it
+    already holds every candidate of its x rows; emit each x row's final
+    neighbours with their rank (``_knn_rank``)."""
+    import numpy as np
+    import pandas as pd
+
+    x, y = pdf[pdf["is_x"]], pdf[pdf["is_y"]]
+    if x.empty or y.empty:  # e.g. an empty cell's group holds only y rows
+        return pd.DataFrame(
+            {"vec_id": [], "neighbor_id": [], "rank": [], "cos_sim": []}
+        )
+    i, j, c, r = _knn_rank(
+        x["vec_id"].to_numpy(np.int64),
+        np.stack(x["v"].to_list()).astype(np.float64),
+        y["vec_id"].to_numpy(np.int64),
+        np.stack(y["v"].to_list()).astype(np.float64),
+    )
+    return pd.DataFrame({"vec_id": i, "neighbor_id": j, "rank": r, "cos_sim": c})
 
 
 def _knn_out_schema():
@@ -1132,9 +1170,9 @@ def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     float64 GEMM by ~1e-7, above 1e-6 only when unrounded). Zero-norm
     vectors have undefined cosine: they emit no rows and are never
     neighbors (the oracle's list_cosine_similarity likewise NULLs out).
-    At 1 B+ vectors the block relation becomes a coarse quantizer's cells
-    and tiles pair only adjacent cells — that scale path is measured by
-    ``knn_graph_ivf`` below.
+    At 1 B+ vectors the blocks become a coarse quantizer's cells and each
+    cell is scored only against the cells it probes — that scale path is
+    ``knn_graph_ivf_listing`` below, measured by ``knn_graph_ivf``.
 
     The returned DataFrame owns its block checkpoint; Spark frees it
     once the DataFrame is unreachable."""
@@ -1171,17 +1209,26 @@ def knn_graph_ivf_listing(
 ) -> DataFrame:
     """The SCALE PATH of ``knn_graph``: blocks are coarse-quantizer CELLS
     (label centroids — same quantizer as similarity_topk_ivf) and each
-    cell's rows are GEMM-tiled only against its ``KNN_IVF_NPROBE``
-    nearest cells by centroid cosine, self included. Tile count drops
-    from B² to cells×nprobe and — the real point at 1 B+ vectors — each
-    tile pair can be co-located by partitioning the corpus on cell_id, so
-    the candidate stream is corpus·nprobe·k rows with NO all-block
-    replication. Cell adjacency is driver-side numpy over the collected
-    centroids (cap-bounded: n_cells rows — the KMEANS_DRIVER_CAP
-    doctrine).
+    cell's rows are scored only against its ``KNN_IVF_NPROBE`` nearest
+    cells by centroid cosine, in one map → shuffle → reduce:
 
-    The returned DataFrame owns its cell checkpoint; Spark frees it
-    once the DataFrame is unreachable."""
+    1. Map: a broadcast hash join against a driver-built route table
+       ``(cell_id, grp, is_x, is_y)`` sends every vector to its own
+       cell's group as an x row, and as a y row to every group whose
+       probe list holds its cell (itself included when the cell is in its
+       own probe list; a cell missing from it still gets its x rows).
+    2. Shuffle: one hash exchange on ``grp``. A group holds one cell plus
+       the cells it probes, i.e. every candidate of its x rows, so the
+       corpus is replicated about nprobe times — half of the earlier
+       (cell, probed cell) tile grid, which shipped each row in about
+       nprobe tiles per side.
+    3. Reduce: ``groupBy(grp).applyInPandas(_knn_cell_topk)`` scores each
+       group with one GEMM under the ``_knn_rank`` convention and emits
+       ranks 1..KNN_K directly — no local top-k, no window exchange.
+
+    Cell adjacency is driver-side numpy over the collected centroids
+    (cap-bounded: n_cells rows — the KMEANS_DRIVER_CAP doctrine). Nothing
+    is checkpointed: the returned DataFrame is a plain lazy plan."""
     import numpy as np
 
     from .annindex import KMEANS_TRAIN_PER_CELL
@@ -1219,26 +1266,21 @@ def knn_graph_ivf_listing(
     n = np.linalg.norm(C, axis=1)
     S = (C @ C.T) / np.outer(np.where(n > 0, n, 1.0), np.where(n > 0, n, 1.0))
     probe = min(nprobe if nprobe is not None else KNN_IVF_NPROBE, len(cid))
-    adj = []
-    for i in range(len(cid)):
-        order = np.lexsort((cid, -S[i]))[:probe]
-        adj.extend((int(cid[i]), int(cid[j])) for j in order)
-    adj_df = spark.createDataFrame(adj, "cell_id LONG, probe_cell LONG")
-    blocks = assigned.groupBy("cell_id").agg(
-        F.collect_list(F.struct("vec_id", "v")).alias("rows")
+    route = []  # (cell_id, grp, is_x, is_y): grp is the cell whose x rows it scores
+    for i, c in enumerate(cid.tolist()):
+        probed = cid[np.lexsort((cid, -S[i]))[:probe]].tolist()
+        route.append((c, c, True, c in probed))
+        route.extend((p, c, False, True) for p in probed if p != c)
+    route_df = spark.createDataFrame(
+        route, "cell_id LONG, grp LONG, is_x BOOLEAN, is_y BOOLEAN"
     )
-    blocks = blocks.localCheckpoint()  # two consumers (both tile sides)
-    tiles = (
-        F.broadcast(adj_df)
-        .join(blocks.alias("x"), "cell_id")
-        .join(
-            blocks.alias("y").withColumnRenamed("cell_id", "probe_cell"),
-            "probe_cell",
-        )
-        .select(F.col("x.rows").alias("xr"), F.col("y.rows").alias("yr"))
-        .repartition(len(adj) or 1)
+    routed = assigned.join(F.broadcast(route_df), "cell_id").select(
+        "grp", "vec_id", "v", "is_x", "is_y"
     )
-    return _global_topk(tiles.mapInPandas(_knn_tile_topk, _knn_out_schema()))
+    return routed.groupBy("grp").applyInPandas(
+        _knn_cell_topk,
+        "vec_id LONG, neighbor_id LONG, rank LONG, cos_sim DOUBLE",
+    )
 
 
 @query(

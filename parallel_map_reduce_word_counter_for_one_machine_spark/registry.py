@@ -71,8 +71,9 @@ def _last_green_round() -> dict[str, int]:
 
 def _files_changed_after_stamp(last: dict[str, int]) -> dict[str, int]:
     """key → module last-commit unix time, for keys whose registered
-    callable's source file was COMMITTED more recently than the
-    CORRECTNESS_r{N}.json that last stamped them green (VERDICT r11 item
+    callable's source file was COMMITTED no earlier than the
+    CORRECTNESS_r{N}.json that last stamped them green, the stamp's own
+    commit included (VERDICT r11 item
     3: the r11 staleness rotation left every behavior-changed operator
     OUTSIDE the driver's oracle window — their stamps predate the change,
     so pure staleness ordering can starve exactly the keys that most need
@@ -111,7 +112,7 @@ def _files_changed_after_stamp(last: dict[str, int]) -> dict[str, int]:
             f"CORRECTNESS_r{rnd}.json"
         )
         mod_ts = file_ts.get(rel)
-        if stamp_ts and mod_ts and mod_ts > stamp_ts:
+        if stamp_ts and mod_ts and mod_ts >= stamp_ts:
             changed[key] = mod_ts
     return changed
 

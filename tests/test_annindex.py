@@ -665,3 +665,27 @@ def test_assign_cells_k_bound_falls_back_to_aggregate(spark):
     assert "Join" not in small._jdf.queryExecution().analyzed().toString()
     with pytest.raises(ValueError):
         _assign_cells(vecs, cents.filter("cell_id < 0"))
+
+
+def test_assign_cells_literal_plan_does_not_grow_with_k(spark):
+    """The literal branch scores every centroid with one lambda set: its
+    analyzed plan holds as many ``lambdafunction`` nodes at k=2 as at k=8,
+    so building the plan costs the same py4j round trips at any k under
+    ASSIGN_LITERAL_CELL_CAP."""
+    from parallel_map_reduce_word_counter_for_one_machine_spark.operators.similarity import (
+        _assign_cells,
+    )
+
+    vecs = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "vec_id LONG, v ARRAY<DOUBLE>"
+    )
+    cents = spark.createDataFrame(
+        [(i, [float(i + 1), 1.0]) for i in range(8)],
+        "cell_id LONG, centroid ARRAY<DOUBLE>",
+    )
+
+    def lambdas(k):
+        out = _assign_cells(vecs, cents.filter(F.col("cell_id") < k))
+        return out._jdf.queryExecution().analyzed().toString().count("lambdafunction")
+
+    assert lambdas(2) == lambdas(8) > 0

@@ -904,7 +904,10 @@ def _three_docs(spark):
     return spark.createDataFrame(rows, "doc_id LONG, text STRING")
 
 
-# Operators whose RETURNED plan reads a localCheckpoint taken inside the call.
+# Operators whose RETURNED plan reads a localCheckpoint taken inside the
+# call. knn_graph_ivf_listing no longer checkpoints (its plan is one lazy
+# map → shuffle → reduce); it stays as a held-result guard, so that a
+# checkpoint brought back into it must keep held results valid.
 CHECKPOINTED_RESULT_OPS = {
     "dedup_containment": lambda spark, sf: D.dedup_containment(
         spark, sf, docs=_three_docs(spark)
@@ -1072,3 +1075,145 @@ def test_knn_graph_ivf_recall_measured(spark, sf_correct):
     for r in rows:
         per_vec.setdefault(r.vec_id, []).append(r.rank)
     assert all(sorted(v) == list(range(1, KNN_K + 1)) for v in per_vec.values())
+
+
+# Hand-built corpus for the IVF k-NN graph (dim 4, integer components so
+# every sum and label mean is exact in float32 and float64). Cells are the
+# labels. Each row is (vec_id, embedding, label).
+_IVF_KNN_ROWS = [
+    # labels 0 and 4 cancel to zero-norm centroids: no vector has a cosine
+    # to them, so cell 0 holds only the zero-norm vector (ties go to the
+    # lowest cell) and cell 4 holds nothing, its group receiving only
+    # candidate rows. Their adjacency rows are all zeros, so they probe the
+    # lowest cell ids rather than their nearest ones.
+    (0, [0, 0, 0, 5], 0),
+    (1, [0, 0, 0, -5], 0),
+    (40, [0, 5, 0, 0], 4),
+    (41, [0, -5, 0, 0], 4),
+    # label 1: vec 10's neighbours 13 and 14 are exact duplicates, so their
+    # 6dp cosines tie at ranks KNN_K and KNN_K + 1 and neighbor_id decides.
+    (10, [8, 1, 0, 0], 1),
+    (11, [8, 2, 0, 0], 1),
+    (12, [8, 1, 1, 0], 1),
+    (13, [8, 0, 0, 3], 1),
+    (14, [8, 0, 0, 3], 1),
+    (15, [8, 1, 2, 0], 1),
+    (16, [8, 0, 4, 4], 1),
+    (17, [7, 1, 0, 1], 1),
+    # label 2 holds the zero-norm vector: it has no cosine, is never a
+    # neighbour and gets no row of its own.
+    (20, [0, 8, 1, 0], 2),
+    (21, [1, 8, 0, 0], 2),
+    (22, [0, 8, 0, 1], 2),
+    (23, [0, 0, 0, 0], 2),
+    (24, [2, 8, 2, 0], 2),
+    (25, [0, 7, 1, 1], 2),
+    # cell 3 (these three rows plus vec 41) has fewer than KNN_K + 1 rows:
+    # at nprobe 1 its vectors have fewer than KNN_K neighbours.
+    (30, [0, 1, 8, 0], 3),
+    (31, [1, 0, 8, 1], 3),
+    (32, [0, 0, 8, 2], 3),
+]
+
+
+def _ivf_knn_brute_force(rows, nprobe):
+    """numpy brute force over each vector's probed cells: label-mean
+    centroids; nearest centroid by cosine with ties and zero-norm vectors to
+    the lowest cell; each cell probes its ``nprobe`` nearest cells by
+    centroid cosine (ties to the lower cell id); every vector is scored
+    against every vector of its cell's probed cells, rounded to 6dp and
+    ranked by (cos desc, neighbor_id asc)."""
+    import math
+
+    import numpy as np
+
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    X = np.array([r[1] for r in rows], dtype=np.float64)
+    labels = np.array([r[2] for r in rows])
+    cids = sorted(set(labels.tolist()))
+    C = np.array([X[labels == c].mean(axis=0) for c in cids])
+
+    def dot(a, b):
+        acc = 0.0
+        for p, q in zip(a.tolist(), b.tolist()):
+            acc += p * q
+        return acc
+
+    def cos(a, b):
+        norms = math.sqrt(dot(a, a)) * math.sqrt(dot(b, b))
+        return dot(a, b) / norms if norms > 0 else None
+
+    cell = []
+    for x in X:
+        sims = [cos(x, c) for c in C]
+        scored = [(s, -cid) for s, cid in zip(sims, cids) if s is not None]
+        cell.append(-max(scored)[1] if scored else cids[0])
+    cell = np.array(cell)
+
+    cn = np.linalg.norm(C, axis=1)
+    cn = np.where(cn > 0, cn, 1.0)
+    cS = (C @ C.T) / np.outer(cn, cn)
+    cid_arr = np.array(cids)
+    probe = min(nprobe if nprobe is not None else S.KNN_IVF_NPROBE, len(cids))
+    probes = {
+        cids[i]: set(cid_arr[np.lexsort((cid_arr, -cS[i]))[:probe]].tolist())
+        for i in range(len(cids))
+    }
+
+    norms = np.linalg.norm(X, axis=1)
+    want = set()
+    for i in range(len(ids)):
+        if norms[i] == 0:
+            continue
+        cands = []
+        for j in range(len(ids)):
+            if j == i or norms[j] == 0 or cell[j] not in probes[cell[i]]:
+                continue
+            c = float(np.round((X[i] @ X[j]) / (norms[i] * norms[j]), 6))
+            cands.append((-c, int(ids[j])))
+        for rk, (negc, nb) in enumerate(sorted(cands)[: S.KNN_K], start=1):
+            want.add((int(ids[i]), nb, rk, -negc))
+    return want
+
+
+@pytest.mark.parametrize("nprobe", [None, 1, 2])
+def test_knn_graph_ivf_matches_probed_brute_force(spark, tmp_path, nprobe):
+    """``knn_graph_ivf_listing`` equals a numpy brute force limited to each
+    vector's probed cells, row for row: the zero-norm vector, the exact 6dp
+    tie at rank KNN_K, the small cell and the zero-norm centroid all keep
+    the rows the brute force gives them."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array([r[0] for r in _IVF_KNN_ROWS], pa.int64()),
+                "embedding": pa.array(
+                    [[float(x) for x in r[1]] for r in _IVF_KNN_ROWS],
+                    pa.list_(pa.float32()),
+                ),
+                "label": pa.array([r[2] for r in _IVF_KNN_ROWS], pa.int32()),
+            }
+        ),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    want = _ivf_knn_brute_force(_IVF_KNN_ROWS, nprobe)
+    # the fixture holds the cases it claims to
+    by_vec = {}
+    for v, nb, rk, c in want:
+        by_vec.setdefault(v, {})[rk] = (nb, c)
+    emb = {r[0]: r[1] for r in _IVF_KNN_ROWS}
+    assert emb[0] == [-x for x in emb[1]] and emb[40] == [-x for x in emb[41]]
+    assert 23 not in by_vec and all(nb != 23 for _, nb, _, _ in want)
+    assert emb[13] == emb[14]
+    assert by_vec[10][S.KNN_K][0] == 13 and (10, 14) not in {
+        (v, nb) for v, nb, _, _ in want
+    }
+    if nprobe == 1:
+        assert all(len(by_vec[v]) < S.KNN_K for v in (30, 31, 32))
+    got = {
+        (r.vec_id, r.neighbor_id, r.rank, r.cos_sim)
+        for r in S.knn_graph_ivf_listing(spark, str(tmp_path), nprobe=nprobe).collect()
+    }
+    assert got == want

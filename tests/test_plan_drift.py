@@ -130,9 +130,12 @@ def test_knn_tile_plan_structure(spark):
     two BLOCK-AGGREGATE relations (Scan ExistingRDD[blk...] twice), and
     the only hash exchange sits ABOVE the _knn_tile_topk kernel — the
     exchanged stream is tile-local top-k rows, never raw pairs.
-    knn_graph_ivf_listing: the cell adjacency joins as a BROADCAST hash
-    join and no BroadcastNestedLoopJoin exists — all-block replication
-    reappearing fails here."""
+    knn_graph_ivf_listing: one map → shuffle → reduce — ONE broadcast
+    hash join routes vectors to cell groups, ONE hash exchange on the
+    group sits below the _knn_cell_topk grouped kernel, and nothing of
+    the earlier tile design is left: no BroadcastNestedLoopJoin (all-block
+    replication), no Window or round-robin repartition (a second, global
+    top-k pass) and no checkpointed block relation."""
     exact = plan_string(
         resolve_headline("knn_graph")(spark, PLANS_SF), mode="simple"
     )
@@ -151,11 +154,22 @@ def test_knn_tile_plan_structure(spark):
         resolve_headline("knn_graph_ivf_listing")(spark, PLANS_SF),
         mode="simple",
     )
-    assert "BroadcastHashJoin" in ivf, ivf
-    assert "BroadcastNestedLoopJoin" not in ivf, (
-        "IVF path must never replicate all blocks\n" + ivf
+    kernel = re.search(r"FlatMapGroupsInPandas [^\n]*_knn_cell_topk", ivf)
+    assert kernel, ivf
+    kernel_pos = kernel.start()
+    assert ivf.count("Exchange hashpartitioning") == 1, ivf
+    assert ivf.find("Exchange hashpartitioning") > kernel_pos, (
+        "the group exchange must sit below the cell kernel\n" + ivf
     )
-    assert "MapInPandas _knn_tile_topk" in ivf
+    assert ivf.count("BroadcastHashJoin") == 1, ivf
+    for gone in (
+        "BroadcastNestedLoopJoin",
+        "Window",
+        "RoundRobinPartitioning",
+        "MapInPandas _knn_tile_topk",
+    ):
+        assert gone not in ivf, f"{gone} is back in the IVF plan\n{ivf}"
+    assert not re.search(r"Scan ExistingRDD\[[^\]]*rows", ivf), ivf
 
 
 def test_drift_gate_would_catch_an_added_exchange():

@@ -54,3 +54,21 @@ def test_prioritize_is_permutation():
     before = set(registry.QUERIES)
     registry.prioritize()
     assert set(registry.QUERIES) == before
+
+
+def test_module_committed_with_its_stamp_counts_as_changed(monkeypatch):
+    """A code change committed in the same commit as the CORRECTNESS stamp
+    has the stamp's commit time; the key must still count as changed since
+    the stamp, or the change is never re-verified ahead of stale keys."""
+    import subprocess
+
+    registry.load_all()
+    key, path = next((k, p) for k, p in registry.QUERY_FILES.items() if p)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(registry.__file__)))
+    fake_log = f"%ct:1000\n\nCORRECTNESS_r07.json\n{os.path.relpath(path, root)}\n"
+
+    def fake_run(*args, **kwargs):
+        return subprocess.CompletedProcess(args, 0, stdout=fake_log, stderr="")
+
+    monkeypatch.setattr(subprocess, "run", fake_run)
+    assert registry._files_changed_after_stamp({key: 7}) == {key: 1000}

@@ -130,10 +130,13 @@ NOTES = {
     "B×B blocked GEMM (one MapInPandas over the tile grid) — the "
     "exchanged candidate stream is corpus·B·k rows, never corpus²; one "
     "vec_id exchange + window finishes the global top-k",
-    "knn_graph_ivf_listing": "the graph's IVF scale path: cells×nprobe "
-    "tiles via a broadcast centroid-adjacency join (adjacency is "
-    "cap-bounded driver numpy over n_cells centroids); same tile kernel, "
-    "candidate stream corpus·nprobe·k; recall verdict: knn_graph_ivf",
+    "knn_graph_ivf_listing": "the graph's IVF scale path as one map → "
+    "shuffle → reduce: a broadcast hash join on a driver-built route table "
+    "(n_cells centroids, numpy) sends each vector to its own cell's group "
+    "and, as a candidate, to every group that probes its cell; ONE grp "
+    "exchange feeds the _knn_cell_topk grouped kernel, which emits final "
+    "ranks — the corpus is replicated ~nprobe times, no window, no "
+    "checkpoint; recall verdict: knn_graph_ivf",
     "dedup_semdedup": "SemDeDup: broadcast centroid assignment, ONE "
     "cell_id-keyed self-join (Σ|cell|² cosines, never corpus²), dominated "
     "set distinct, left-anti back onto the corpus — no iteration",

@@ -30,7 +30,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
+    """One entry per implemented operator from SURVEY.md §2, in stamping
+    priority order (``registry.prioritize``, run on the first call)."""
+    registry.prioritize_once()
     return dict(registry.QUERIES)
 
 

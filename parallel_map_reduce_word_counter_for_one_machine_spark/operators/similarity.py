@@ -20,7 +20,9 @@ sequential accumulation matching the DuckDB oracle bit-for-bit before the
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+import math
+
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -53,6 +55,40 @@ def cosine(x: Column, y: Column) -> Column:
     caught by tests/test_edge_cases.py on a synthetic zero-vector corpus."""
     norms = F.sqrt(dot(x, x)) * F.sqrt(dot(y, y))
     return F.when(norms > 0, dot(x, y) / norms)
+
+
+def plan_literal(value) -> Column:
+    """Driver-side ``value`` as ONE JVM literal column, built with a
+    constant number of py4j calls however many floats it holds: the value
+    is printed as Spark SQL text and parsed once by ``F.expr`` (``F.lit``
+    on a list pays one py4j call per element). Floats print as
+    ``repr(x) + "D"`` — the shortest text that round-trips — so the plan
+    holds the same float64 bits; NaN and ±inf have no SQL literal and
+    raise ``ValueError``. Lists become ``array``, dicts ``map``, ``Row``s
+    ``named_struct``, ints ``bigint`` and bools ``boolean``."""
+    return F.expr(_sql_text(value))
+
+
+def _sql_text(v) -> str:
+    if isinstance(v, Row):
+        return "named_struct(" + ", ".join(
+            f"'{k}', {_sql_text(x)}" for k, x in v.asDict().items()
+        ) + ")"
+    if isinstance(v, dict):
+        return "map(" + ", ".join(
+            f"{_sql_text(k)}, {_sql_text(x)}" for k, x in v.items()
+        ) + ")"
+    if isinstance(v, list):
+        return "array(" + ", ".join(_sql_text(x) for x in v) + ")"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        return f"{v}L"
+    if isinstance(v, float):
+        if not math.isfinite(v):
+            raise ValueError(f"plan_literal: non-finite float {v!r}")
+        return repr(v) + "D"
+    raise TypeError(f"plan_literal: unsupported value {v!r}")
 
 
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -258,20 +294,17 @@ def _kmeans_driver(spark, rows, k: int, iters: int) -> DataFrame:
 
 
 def _cents_literal_df(spark, cell_ids, C) -> DataFrame:
-    """(cell_id, centroid) relation from driver-side values via JVM
-    literals (range(1) + explode) — float64-exact, never a pickled local
-    relation decoded through a Python worker."""
-    structs = [
-        F.struct(
-            F.lit(int(cid)).cast("int").alias("cell_id"),
-            F.lit([float(x) for x in c]).alias("centroid"),
-        )
+    """(cell_id, centroid) relation from driver-side values via one JVM
+    literal (``plan_literal``, range(1) + explode) — float64-exact, never
+    a pickled local relation decoded through a Python worker."""
+    rows = [
+        Row(cell_id=int(cid), centroid=[float(x) for x in c])
         for cid, c in zip(cell_ids, C)
     ]
     return (
         spark.range(1)
-        .select(F.explode(F.array(*structs)).alias("s"))
-        .select("s.cell_id", "s.centroid")
+        .select(F.explode(plan_literal(rows)).alias("s"))
+        .select(F.col("s.cell_id").cast("int").alias("cell_id"), "s.centroid")
     )
 
 
@@ -340,15 +373,17 @@ def _assign_cells(
     vecs: DataFrame, cents: DataFrame, crows: list | None = None
 ) -> DataFrame:
     """Nearest-centroid assignment as a PURE MAP (optimization r11, guide
-    §2.4/§8 — assignment is a per-row decision against a small broadcast
-    relation, so no corpus-wide exchange belongs here): the centroid table
-    is collected to the driver (k rows of dim floats — bounded by
-    construction everywhere this is called, the KMEANS_DRIVER_CAP
-    doctrine) and the argmax becomes ``array_max`` over ONE ``transform``
-    of a k-element literal array of (centroid, -cell_id) structs into
-    (sim, -cell_id) structs. One cosine lambda set scores every centroid,
-    so the plan — and the py4j round trips that build it — no longer
-    grows by a cosine per cell (pinned in tests/test_annindex.py::
+    §2.4/§8 — assignment is a per-row decision against a small reference
+    relation, so neither a join nor a corpus-wide exchange belongs here):
+    the centroid table is collected to the driver (k rows of dim floats —
+    bounded by construction everywhere this is called, the
+    KMEANS_DRIVER_CAP doctrine) and the argmax becomes ``array_max`` over
+    ONE ``transform`` of a k-element literal array of (centroid, -cell_id)
+    structs into (sim, -cell_id) structs. The array is one
+    ``plan_literal`` — one SQL text parsed once, not a py4j ``lit`` call
+    per float — and one cosine lambda set scores every centroid, so
+    neither the plan nor the py4j round trips that build it grow with k
+    (pinned in tests/test_annindex.py::
     test_assign_cells_literal_plan_does_not_grow_with_k); the struct order
     and the arithmetic are those of the earlier form that built one
     cosine per centroid, so assignments are unchanged. The pre-r11
@@ -362,13 +397,14 @@ def _assign_cells(
     ordered first so zero-norm vectors land in the lowest surviving cell
     — equality-tested against the old path in tests/test_annindex.py::
     test_assign_cells_pure_map_matches_aggregate), and the centroid
-    floats round-trip the driver exactly (collect → F.lit preserves
-    float64), so assignments are bit-identical. Interleaved A/B at sf0.1
-    (knn_graph_ivf_listing end-to-end, 4 alternations × 3 variants):
-    wall-NEUTRAL within this box's noise (mins 4.9 old / 4.3 pure-map,
-    but per-round ordering unstable) — the win is the structural one the
-    plan shows: the corpus-wide exchange is GONE, which is what matters
-    at 100 TB where that exchange carries every vector's payload.
+    floats round-trip the driver exactly (collect → ``plan_literal``
+    preserves float64), so assignments are bit-identical. Interleaved A/B
+    at sf0.1 (knn_graph_ivf_listing end-to-end, 4 alternations × 3
+    variants): wall-NEUTRAL within this box's noise (mins 4.9 old / 4.3
+    pure-map, but per-round ordering unstable) — the win is the
+    structural one the plan shows: the corpus-wide exchange is GONE,
+    which is what matters at 100 TB where that exchange carries every
+    vector's payload.
 
     ``crows`` lets a caller that already collected the centroid rows
     (knn_graph_ivf_listing builds its probe adjacency from them) share
@@ -404,14 +440,8 @@ def _assign_cells(
         return best.select(
             "vec_id", F.col("b.v").alias("v"), (-F.col("b.negc")).alias("cell_id")
         )
-    lits = F.array(
-        *[
-            F.struct(
-                F.lit([float(x) for x in r.centroid]).alias("c"),
-                F.lit(-int(r.cell_id)).cast("long").alias("negc"),
-            )
-            for r in crows
-        ]
+    lits = plan_literal(
+        [Row(c=[float(x) for x in r.centroid], negc=-int(r.cell_id)) for r in crows]
     )
     cands = F.transform(
         lits,
@@ -1212,11 +1242,15 @@ def knn_graph_ivf_listing(
     cell's rows are scored only against its ``KNN_IVF_NPROBE`` nearest
     cells by centroid cosine, in one map → shuffle → reduce:
 
-    1. Map: a broadcast hash join against a driver-built route table
-       ``(cell_id, grp, is_x, is_y)`` sends every vector to its own
-       cell's group as an x row, and as a y row to every group whose
-       probe list holds its cell (itself included when the cell is in its
-       own probe list; a cell missing from it still gets its x rows).
+    1. Map: ``explode(element_at(route, cell_id))`` against a literal
+       route map ``cell_id → [(grp, is_x, is_y)]``, built on the driver
+       (``plan_literal``), sends every vector to its own cell's group as
+       an x row, and as a y row to every group whose probe list holds its
+       cell (itself included when the cell is in its own probe list; a
+       cell missing from it still gets its x rows). Routing is a per-row
+       lookup inside the map: no join, so no broadcast job, and no
+       ``isnotnull`` filter the optimizer would infer from a join key and
+       evaluate the cell argmax for a second time.
     2. Shuffle: one hash exchange on ``grp``. A group holds one cell plus
        the cells it probes, i.e. every candidate of its x rows, so the
        corpus is replicated about nprobe times — half of the earlier
@@ -1227,8 +1261,11 @@ def knn_graph_ivf_listing(
        ranks 1..KNN_K directly — no local top-k, no window exchange.
 
     Cell adjacency is driver-side numpy over the collected centroids
-    (cap-bounded: n_cells rows — the KMEANS_DRIVER_CAP doctrine). Nothing
-    is checkpointed: the returned DataFrame is a plain lazy plan."""
+    (cap-bounded: n_cells rows — the KMEANS_DRIVER_CAP doctrine), and
+    every collected cell must be a key of the route map, or raise: an
+    unmapped cell would route to NULL and explode would drop its rows
+    silently. Nothing is checkpointed: the returned DataFrame is a plain
+    lazy plan."""
     import numpy as np
 
     from .annindex import KMEANS_TRAIN_PER_CELL
@@ -1266,16 +1303,22 @@ def knn_graph_ivf_listing(
     n = np.linalg.norm(C, axis=1)
     S = (C @ C.T) / np.outer(np.where(n > 0, n, 1.0), np.where(n > 0, n, 1.0))
     probe = min(nprobe if nprobe is not None else KNN_IVF_NPROBE, len(cid))
-    route = []  # (cell_id, grp, is_x, is_y): grp is the cell whose x rows it scores
+    # cell_id → the groups its rows go to; grp is the cell whose x rows
+    # the group scores
+    route: dict[int, list] = {}
     for i, c in enumerate(cid.tolist()):
         probed = cid[np.lexsort((cid, -S[i]))[:probe]].tolist()
-        route.append((c, c, True, c in probed))
-        route.extend((p, c, False, True) for p in probed if p != c)
-    route_df = spark.createDataFrame(
-        route, "cell_id LONG, grp LONG, is_x BOOLEAN, is_y BOOLEAN"
-    )
-    routed = assigned.join(F.broadcast(route_df), "cell_id").select(
-        "grp", "vec_id", "v", "is_x", "is_y"
+        route.setdefault(c, []).append(Row(grp=c, is_x=True, is_y=c in probed))
+        for p in probed:
+            if p != c:
+                route.setdefault(p, []).append(Row(grp=c, is_x=False, is_y=True))
+    # An unmapped cell would route to NULL and explode would drop its rows.
+    missing = {r.cell_id for r in crows} - set(route)
+    if missing:
+        raise ValueError(f"knn_graph_ivf_listing: cells {sorted(missing)} unrouted")
+    groups = F.element_at(plan_literal(route), F.col("cell_id"))
+    routed = assigned.select("vec_id", "v", F.explode(groups).alias("r")).select(
+        "r.grp", "vec_id", "v", "r.is_x", "r.is_y"
     )
     return routed.groupBy("grp").applyInPandas(
         _knn_cell_topk,

@@ -13,6 +13,8 @@ with ``oracle=None`` and get the driver's weaker rows-only check.
 
 from __future__ import annotations
 
+import functools
+import os
 from collections.abc import Callable
 from typing import Optional
 
@@ -23,7 +25,8 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 # key → source file of the registered callable (for change-aware stamping
-# priority in ``prioritize`` — VERDICT r11 item 3).
+# priority in ``prioritize`` — VERDICT r11 item 3; the package modules that
+# file imports count too, see ``_package_imports``).
 QUERY_FILES: dict[str, str] = {}
 
 
@@ -50,7 +53,6 @@ def _last_green_round() -> dict[str, int]:
     from the recorded CORRECTNESS_r{N}.json files (repo root)."""
     import glob
     import json
-    import os
     import re
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -69,9 +71,53 @@ def _last_green_round() -> dict[str, int]:
     return last
 
 
+@functools.cache
+def _package_imports(path: str) -> tuple[str, ...]:
+    """Source files of the package modules that the file at ``path``
+    imports, at module level or inside a function, other than this
+    registry: a key's behaviour changes when a helper module its operator
+    calls changes (an edit to ``similarity.py`` changes the ``semdedup``
+    keys). Direct imports only."""
+    import ast
+
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    root = os.path.dirname(pkg_dir)
+    path = os.path.abspath(path)
+    try:
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+    except (OSError, SyntaxError, ValueError):
+        return ()
+    # dotted parts of the importing module; for an __init__.py, dropping
+    # the last part leaves the package itself, as relative imports expect
+    here = os.path.relpath(os.path.splitext(path)[0], root).split(os.sep)
+    names: list[list[str]] = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom):
+            base = here[: len(here) - node.level] if node.level else []
+            mod = base + (node.module.split(".") if node.module else [])
+            names.append(mod)
+            names.extend(mod + [a.name] for a in node.names)  # `from . import x`
+        elif isinstance(node, ast.Import):
+            names.extend(a.name.split(".") for a in node.names)
+    files = set()
+    for parts in names:
+        if parts[:1] != [os.path.basename(pkg_dir)]:
+            continue
+        for cand in (
+            os.path.join(root, *parts) + ".py",
+            os.path.join(root, *parts, "__init__.py"),
+        ):
+            if os.path.isfile(cand):
+                files.add(cand)
+    files -= {path, os.path.abspath(__file__)}
+    return tuple(sorted(files))
+
+
 def _files_changed_after_stamp(last: dict[str, int]) -> dict[str, int]:
     """key → module last-commit unix time, for keys whose registered
-    callable's source file was COMMITTED no earlier than the
+    callable's source file, or a package module that file imports
+    (``_package_imports``), was COMMITTED no earlier than the
     CORRECTNESS_r{N}.json that last stamped them green, the stamp's own
     commit included (VERDICT r11 item
     3: the r11 staleness rotation left every behavior-changed operator
@@ -80,7 +126,6 @@ def _files_changed_after_stamp(last: dict[str, int]) -> dict[str, int]:
     re-verification). One ``git log --name-only`` pass gives each file's
     last-commit time; degrades to the empty dict (pure staleness order)
     when git is unavailable."""
-    import os
     import subprocess
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -107,11 +152,13 @@ def _files_changed_after_stamp(last: dict[str, int]) -> dict[str, int]:
         rnd = last.get(key)
         if rnd is None or not path:
             continue  # never green: already first-class in the sort
-        rel = os.path.relpath(path, root)
         stamp_ts = file_ts.get(f"CORRECTNESS_r{rnd:02d}.json") or file_ts.get(
             f"CORRECTNESS_r{rnd}.json"
         )
-        mod_ts = file_ts.get(rel)
+        mod_ts = max(
+            file_ts.get(os.path.relpath(f, root), 0)
+            for f in (path, *_package_imports(path))
+        )
         if stamp_ts and mod_ts and mod_ts >= stamp_ts:
             changed[key] = mod_ts
     return changed
@@ -151,10 +198,16 @@ def prioritize() -> None:
     QUERIES.update(items)
 
 
+@functools.cache
+def prioritize_once() -> None:
+    """``prioritize`` on first call only. ``__spark_entry__.queries()``
+    calls it, so importing the entry module starts no ``git`` process."""
+    prioritize()
+
+
 def load_all() -> None:
-    """Import every operator module for its registration side effects, then
-    reorder the registry so un-verified keys land inside the driver's
-    per-round stamping budget (see ``prioritize``)."""
+    """Import every operator module for its registration side effects.
+    Registration order stands until ``prioritize`` reorders it."""
     # Imports deferred so `import registry` stays cheap and cycle-free.
     from .operators import (  # noqa: F401
         binarytok,
@@ -207,5 +260,3 @@ def load_all() -> None:
         temporal,
         sqlfront,
     )
-
-    prioritize()

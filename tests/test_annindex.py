@@ -689,3 +689,25 @@ def test_assign_cells_literal_plan_does_not_grow_with_k(spark):
         return out._jdf.queryExecution().analyzed().toString().count("lambdafunction")
 
     assert lambdas(2) == lambdas(8) > 0
+
+
+def test_plan_literal_round_trips_float64_bits(spark):
+    """``plan_literal`` keeps every float64 bit — signed zero, the
+    smallest subnormal, the largest finite double — and refuses values
+    that have no SQL literal instead of planning a wrong one."""
+    import struct
+
+    from pyspark.sql import Row
+
+    from parallel_map_reduce_word_counter_for_one_machine_spark.operators.similarity import (
+        plan_literal,
+    )
+
+    vals = [-0.0, 5e-324, 0.1, 1.7976931348623157e308, -1e-300]
+    got = spark.range(1).select(plan_literal(vals).alias("a")).collect()[0].a
+    assert [struct.pack("<d", x) for x in got] == [struct.pack("<d", x) for x in vals]
+    route = {7: [Row(grp=7, is_x=True)], -2: [Row(grp=7, is_x=False)]}
+    assert spark.range(1).select(plan_literal(route).alias("m")).collect()[0].m == route
+    for bad in (float("nan"), float("inf"), float("-inf")):
+        with pytest.raises(ValueError):
+            plan_literal([0.5, bad])

@@ -72,3 +72,60 @@ def test_module_committed_with_its_stamp_counts_as_changed(monkeypatch):
 
     monkeypatch.setattr(subprocess, "run", fake_run)
     assert registry._files_changed_after_stamp({key: 7}) == {key: 1000}
+
+
+def test_helper_module_change_flags_dependent_keys(monkeypatch):
+    """A commit that touches only a helper module (similarity.py) after
+    the stamp flags the keys whose operator files import it (annindex's
+    and semdedup's), not the keys of modules that do not import it."""
+    import subprocess
+
+    registry.load_all()
+    root = os.path.dirname(os.path.dirname(os.path.abspath(registry.__file__)))
+    pkg = os.path.dirname(os.path.abspath(registry.__file__))
+
+    def rel(path):
+        return os.path.relpath(path, root)
+
+    dependent = ["dedup_semdedup", "similarity_topk_ivfpq_kmeans_pruned"]
+    keys = dependent + ["word_count"]
+    fake_log = (
+        f"%ct:3000\n\n{rel(os.path.join(pkg, 'operators', 'similarity.py'))}\n"
+        "%ct:2000\n\nCORRECTNESS_r07.json\n"
+        "%ct:1000\n\n" + "".join(f"{rel(registry.QUERY_FILES[k])}\n" for k in keys)
+    )
+
+    def fake_run(*args, **kwargs):
+        return subprocess.CompletedProcess(args, 0, stdout=fake_log, stderr="")
+
+    monkeypatch.setattr(subprocess, "run", fake_run)
+    changed = registry._files_changed_after_stamp({k: 7 for k in keys})
+    assert changed == {k: 3000 for k in dependent}
+
+
+def test_entry_import_starts_no_git(monkeypatch):
+    """Importing ``__spark_entry__`` starts no subprocess; the first
+    ``queries()`` call puts the keys in ``prioritize`` order, and later
+    calls return that order without prioritizing again."""
+    import importlib.util
+    import subprocess
+
+    def no_subprocess(*args, **kwargs):
+        raise AssertionError("subprocess started")
+
+    monkeypatch.setattr(subprocess, "run", no_subprocess)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "_spark_entry_under_test", os.path.join(root, "__spark_entry__.py")
+    )
+    entry = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(entry)
+    monkeypatch.undo()
+
+    registry.prioritize_once.cache_clear()
+    first = list(entry.queries())
+    monkeypatch.setattr(subprocess, "run", no_subprocess)
+    assert list(entry.queries()) == first
+    monkeypatch.undo()
+    registry.prioritize()
+    assert list(registry.QUERIES) == first

@@ -815,7 +815,7 @@ def ivfpq_pruned_topk_listing(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
     cands = vecs.select(F.col("vec_id").alias("cand_id"), F.col("v").alias("cv"))
-    sim = F.round(cosine(F.col("qv"), F.col("cv")), 6)
+    sim = F.round(cosine("qv", "cv"), 6)
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
     return (
         cands.join(F.broadcast(shortlisted), "cand_id")

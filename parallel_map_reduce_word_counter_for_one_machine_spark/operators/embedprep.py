@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.tables import load_table
-from .similarity import cosine
+from .similarity import _vectors, cosine
 
 # Contamination threshold: on the isotropic synthetic embeddings 0.3 sits
 # at the same operating point as dedup_embedding's COSINE_THRESHOLD (the
@@ -55,17 +55,6 @@ CONTAM_TAU = 0.3
 BENCH_MOD = 10  # vec_id % 10 == 0 is the held-out "benchmark" split
 N_ANCHORS = 20  # triplet anchors: vec_id < 20
 HASH_DIMS = 16  # feature-hashing output dimensionality
-
-
-def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Near-twin of similarity._vectors but keeps ``label`` (triplet mining
-    # partitions candidates by it); same double-cast policy.
-    emb = load_table(spark, sf_dir, "embeddings")
-    return emb.select(
-        "vec_id",
-        "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
 
 
 def hashed_cte_sql(src: str) -> str:
@@ -112,7 +101,7 @@ def decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("bench_id"), F.col("v").alias("bv")
     )
     corpus = v.filter(F.col("vec_id") % BENCH_MOD != 0)
-    cos6 = F.round(cosine(F.col("v"), F.col("bv")), 6)
+    cos6 = F.round(cosine("v", "bv"), 6)
     return (
         corpus.join(F.broadcast(bench), cos6 >= CONTAM_TAU)
         .select("vec_id", cos6.alias("cos6"))
@@ -173,7 +162,7 @@ def triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").alias("alabel"),
         F.col("v").alias("av"),
     )
-    cos6 = F.round(cosine(F.col("av"), F.col("v")), 6)
+    cos6 = F.round(cosine("av", "v"), 6)
     scored = (
         v.join(F.broadcast(anchors), F.col("vec_id") != F.col("anchor_id"))
         .select(

@@ -69,7 +69,7 @@ def assign_cells_with_sim(vecs: DataFrame, cents: DataFrame) -> DataFrame:
         "vec_id",
         "v",
         "cell_id",
-        cosine(F.col("v"), F.col("centroid")).alias("cent_sim"),
+        cosine("v", "centroid").alias("cent_sim"),
     )
     w = Window.partitionBy("vec_id").orderBy(F.desc("cent_sim"), F.asc("cell_id"))
     return (
@@ -96,7 +96,7 @@ def semdedup_kept(vecs: DataFrame, cents: DataFrame) -> DataFrame:
         b,
         (F.col("a.cell_id") == F.col("b.cell_id"))
         & (F.col("a.vec_id") < F.col("b.vec_id")),
-    ).filter(cosine(F.col("a.v"), F.col("b.v")) >= SEMDEDUP_TAU)
+    ).filter(cosine("a.v", "b.v") >= SEMDEDUP_TAU)
     # Per τ-edge the endpoint CLOSER to the centroid loses; priority is
     # (cent_sim ASC, vec_id ASC) so every pair names exactly one loser.
     a_wins = (F.col("a.cent_sim") < F.col("b.cent_sim")) | (

@@ -40,21 +40,50 @@ N_QUERIES = 5  # vec_id < 5 are the query vectors
 N_PROBE = 5
 
 
-def dot(x: Column, y: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda acc, t: acc + t
-    )
+def _dot_sql(x: str, y: str) -> str:
+    """SQL text of the dot product of two array<double> expressions: the
+    products summed left to right from 0.0, one IEEE rounding each. The
+    lambda variables are named as PySpark names those of Python lambdas."""
+    return f"aggregate(zip_with({x}, {y}, (x, y) -> x * y), 0D, (x, y) -> x + y)"
 
 
-def cosine(x: Column, y: Column) -> Column:
-    """NULL for zero-norm inputs (ANSI mode — Spark 4 default — would raise
+def _cosine_sql(x: str, y: str, nx: str | None = None, ny: str | None = None) -> str:
+    """SQL text of the cosine of ``x`` and ``y``, NULL unless the product
+    of their norms is > 0. ``nx``/``ny`` replace the default norm text
+    ``sqrt(dot(x, x))`` when a caller already holds that value."""
+    nx = nx or f"sqrt({_dot_sql(x, x)})"
+    ny = ny or f"sqrt({_dot_sql(y, y)})"
+    return f"CASE WHEN {nx} * {ny} > 0 THEN {_dot_sql(x, y)} / ({nx} * {ny}) END"
+
+
+def dot(x: str, y: str) -> Column:
+    """Dot product of the array<double> columns named ``x`` and ``y``."""
+    return F.expr(_dot_sql(x, y))
+
+
+def cosine(x: str, y: str) -> Column:
+    """Cosine of the array<double> columns named ``x`` and ``y`` (SQL
+    names, qualified ones such as ``"a.v"`` included), built as one SQL
+    text parsed by one ``F.expr`` call: a Python lambda build would cost
+    hundreds of py4j round trips per call.
+
+    NULL for zero-norm inputs (ANSI mode — Spark 4 default — would raise
     DIVIDE_BY_ZERO). The top-k rankers additionally FILTER these NULLs out
     before ranking: NULL sorts last, but when a query has fewer than k
     scored candidates a zero-norm row would otherwise pad the tail of the
     listing with an undefined similarity (and the numpy twin drops them) —
     caught by tests/test_edge_cases.py on a synthetic zero-vector corpus."""
-    norms = F.sqrt(dot(x, x)) * F.sqrt(dot(y, y))
-    return F.when(norms > 0, dot(x, y) / norms)
+    return F.expr(_cosine_sql(x, y))
+
+
+def _norm(c) -> float:
+    """Driver-side ``sqrt(dot(c, c))`` with the JVM's operations in the
+    JVM's order (products summed left to right from 0.0, then a correctly
+    rounded sqrt), so it returns the same float64 bits."""
+    acc = 0.0
+    for x in c:
+        acc += x * x
+    return math.sqrt(acc)
 
 
 def plan_literal(value) -> Column:
@@ -65,11 +94,14 @@ def plan_literal(value) -> Column:
     ``repr(x) + "D"`` — the shortest text that round-trips — so the plan
     holds the same float64 bits; NaN and ±inf have no SQL literal and
     raise ``ValueError``. Lists become ``array``, dicts ``map``, ``Row``s
-    ``named_struct``, ints ``bigint`` and bools ``boolean``."""
+    ``named_struct``, ints ``bigint``, bools ``boolean`` and None
+    ``NULL``."""
     return F.expr(_sql_text(value))
 
 
 def _sql_text(v) -> str:
+    if v is None:
+        return "NULL"
     if isinstance(v, Row):
         return "named_struct(" + ", ".join(
             f"'{k}', {_sql_text(x)}" for k, x in v.asDict().items()
@@ -93,10 +125,8 @@ def _sql_text(v) -> str:
 
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return emb.select(
-        "vec_id",
-        "label",
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),
+    return emb.selectExpr(
+        "vec_id", "label", "transform(embedding, x -> cast(x as double)) AS v"
     )
 
 
@@ -136,7 +166,7 @@ def similarity_topk(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
     cands = vecs.select(F.col("vec_id").alias("cand_id"), F.col("v").alias("cv"))
-    sim = F.round(cosine(F.col("qv"), F.col("cv")), 6)
+    sim = F.round(cosine("qv", "cv"), 6)
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
     return (
         F.broadcast(queries)
@@ -226,9 +256,40 @@ def label_centroids(vecs: DataFrame) -> DataFrame:
         .agg(F.array_sort(F.collect_list(F.struct("dim", "mean"))).alias("dm"))
         .select(
             F.col("label").alias("cell_id"),
-            F.transform(F.col("dm"), lambda s: s.getField("mean")).alias("centroid"),
+            F.expr("transform(dm, x -> x.mean)").alias("centroid"),
         )
     )
+
+
+def _label_means(rows) -> list:
+    """The driver twin of ``label_centroids`` for a collected, bounded
+    sample of (label, v) rows: (cell_id, centroid) Rows sorted by cell_id.
+    Each label's vectors are summed element-wise in ``rows`` order from
+    0.0 and divided by their count — the float64 operations of Spark's
+    ``avg`` over one scan partition, so the means have its bits (numpy's
+    pairwise ``mean`` would move the last bits). Rows with NULL ``v`` are
+    skipped as ``avg`` skips them; a NULL label, a NULL element or vectors
+    of different lengths raise ValueError."""
+    sums: dict = {}
+    counts: dict = {}
+    dim = None
+    for r in rows:
+        if r.v is None:
+            continue
+        if r.label is None:
+            raise ValueError("_label_means: NULL label")
+        dim = len(r.v) if dim is None else dim
+        if len(r.v) != dim or None in r.v:
+            raise ValueError(
+                f"_label_means: vector of label {r.label} is not {dim} non-NULL numbers"
+            )
+        acc = sums.setdefault(r.label, [0.0] * dim)
+        for i, x in enumerate(r.v):
+            acc[i] += x
+        counts[r.label] = counts.get(r.label, 0) + 1
+    return [
+        Row(cell_id=c, centroid=[x / counts[c] for x in sums[c]]) for c in sorted(sums)
+    ]
 
 
 # Bound under which Lloyd's runs driver-side in numpy (r08, VERDICT item
@@ -362,7 +423,7 @@ def kmeans_centroids(
             .agg(F.array_sort(F.collect_list(F.struct("dim", "mean"))).alias("dm"))
             .select(
                 "cell_id",
-                F.transform(F.col("dm"), lambda s: s.getField("mean")).alias("centroid"),
+                F.expr("transform(dm, x -> x.mean)").alias("centroid"),
             )
             .collect()
         )
@@ -377,50 +438,45 @@ def _assign_cells(
     relation, so neither a join nor a corpus-wide exchange belongs here):
     the centroid table is collected to the driver (k rows of dim floats —
     bounded by construction everywhere this is called, the
-    KMEANS_DRIVER_CAP doctrine) and the argmax becomes ``array_max`` over
-    ONE ``transform`` of a k-element literal array of (centroid, -cell_id)
-    structs into (sim, -cell_id) structs. The array is one
-    ``plan_literal`` — one SQL text parsed once, not a py4j ``lit`` call
-    per float — and one cosine lambda set scores every centroid, so
-    neither the plan nor the py4j round trips that build it grow with k
-    (pinned in tests/test_annindex.py::
-    test_assign_cells_literal_plan_does_not_grow_with_k); the struct order
-    and the arithmetic are those of the earlier form that built one
-    cosine per centroid, so assignments are unchanged. The pre-r11
-    formulation crossJoined a
-    broadcast of cents and ran ``groupBy(vec_id).agg(max(struct(sim,
-    -cell_id, v)))`` — map-side combine already produced one winner per
-    vec_id per partition, so the hash exchange it fed (every corpus row,
-    with the dim-double ``v`` payload riding along) was a semantic no-op.
-    array_max uses the same struct total order as the max aggregate
-    (sim DESC first, then -cell_id → lowest cell on ties, NULL sims
-    ordered first so zero-norm vectors land in the lowest surviving cell
-    — equality-tested against the old path in tests/test_annindex.py::
+    KMEANS_DRIVER_CAP doctrine) and the argmax is ONE SQL expression,
+    ``-array_max(transform(cells, s -> named_struct('sim', …, 'negc',
+    s.negc))).negc``, over a k-element literal array of (centroid, norm,
+    -cell_id) structs (``_cell_sims_sql``). The expression is one SQL
+    text handed to one ``selectExpr`` call, so neither the plan nor the
+    py4j round trips that build it grow with k (pinned in
+    tests/test_annindex.py::test_assign_cells_literal_plan_does_not_grow_with_k
+    and ::test_assign_cells_plan_build_py4j_calls_do_not_grow_with_k).
+
+    One dot product per (row, centroid): the row norm ``nv`` is computed
+    once per row in the projection below, and each centroid's norm is
+    computed on the driver by ``_norm`` with the JVM's operations in the
+    JVM's order, so it has the JVM's bits. The cosine arithmetic is
+    ``cosine``'s, term for term, so every sim and assignment is the one
+    the unhoisted form gives. array_max uses the same struct total order
+    as a max aggregate (sim DESC first, then -cell_id → lowest cell on
+    ties, NULL sims ordered first so zero-norm vectors land in the lowest
+    surviving cell and zero-norm centroids never win over a scoring cell
+    — equality-tested against the aggregate in tests/test_annindex.py::
     test_assign_cells_pure_map_matches_aggregate), and the centroid
-    floats round-trip the driver exactly (collect → ``plan_literal``
-    preserves float64), so assignments are bit-identical. Interleaved A/B
-    at sf0.1 (knn_graph_ivf_listing end-to-end, 4 alternations × 3
-    variants): wall-NEUTRAL within this box's noise (mins 4.9 old / 4.3
-    pure-map, but per-round ordering unstable) — the win is the
-    structural one the plan shows: the corpus-wide exchange is GONE,
-    which is what matters at 100 TB where that exchange carries every
-    vector's payload.
+    floats round-trip the driver exactly (collect → ``_sql_text``
+    preserves float64). The pre-r11 formulation crossJoined a broadcast
+    of cents and ran ``groupBy(vec_id).agg(max(struct(sim, -cell_id,
+    v)))``, whose hash exchange carried every corpus row with its
+    payload for no semantic effect.
 
-    ``crows`` lets a caller that already collected the centroid rows
-    (knn_graph_ivf_listing builds its probe adjacency from them) share
-    the collect instead of evaluating the centroid build twice.
+    ``crows`` lets a caller that already holds the centroid rows
+    (knn_graph_ivf_listing, kmeans_centroids) pass them instead of a
+    relation to collect.
 
-    k-bound (r12, VERDICT r11 item 3 "what's wrong"): the literal struct
-    array bakes k × dim float literals into the expression tree, which
-    is fine at the documented bounds (k ≲ 100, dim 64) but would explode
-    plan/codegen size if n_cells ever scaled toward √N (10⁴⁺ cells at
-    the 100 TB tier). Above ``ASSIGN_LITERAL_CELL_CAP`` the function
-    falls back to the pre-r11 aggregate formulation — broadcast-
-    crossJoin + partial-aggregable ``max(struct(sim, -cell_id))`` —
-    which degrades gracefully at any k (same winner per the struct
-    total order; equality pinned in tests/test_annindex.py). Empty
-    centroid input raises instead of silently assigning NULL cells
-    (ADVICE r11)."""
+    k-bound (r12): the literal struct array bakes k × dim float literals
+    into the expression tree, which is fine at the documented bounds
+    (k ≲ 100, dim 64) but would explode plan/codegen size if n_cells
+    ever scaled toward √N. Above ``ASSIGN_LITERAL_CELL_CAP`` the
+    function falls back to the broadcast-crossJoin + partial-aggregable
+    ``max(struct(sim, -cell_id))`` formulation, which degrades gracefully
+    at any k (same winner per the struct total order; equality pinned in
+    tests/test_annindex.py). Empty centroid input raises instead of
+    silently assigning NULL cells."""
     if crows is None:
         crows = cents.collect()
     if not crows:
@@ -431,7 +487,7 @@ def _assign_cells(
         scored = vecs.crossJoin(F.broadcast(cents)).select(
             "vec_id",
             F.struct(
-                cosine(F.col("v"), F.col("centroid")).alias("sim"),
+                cosine("v", "centroid").alias("sim"),
                 (-F.col("cell_id")).cast("long").alias("negc"),
                 F.col("v"),
             ).alias("cand"),
@@ -440,17 +496,33 @@ def _assign_cells(
         return best.select(
             "vec_id", F.col("b.v").alias("v"), (-F.col("b.negc")).alias("cell_id")
         )
-    lits = plan_literal(
-        [Row(c=[float(x) for x in r.centroid], negc=-int(r.cell_id)) for r in crows]
-    )
-    cands = F.transform(
-        lits,
-        lambda s: F.struct(
-            cosine(F.col("v"), s["c"]).alias("sim"), s["negc"].alias("negc")
-        ),
-    )
-    return vecs.select(
-        "vec_id", "v", (-F.array_max(cands)["negc"]).alias("cell_id")
+    # nv stays its own projection because the argmax references it twice
+    # and the optimizer does not inline an expensive expression into two
+    # places; with finite centroid norms the coalesce fallback folds away,
+    # so the optimized plan holds two dot products (tests/test_annindex.py::
+    # test_hoisted_norms_keep_the_cosine_bits).
+    return vecs.selectExpr(
+        "vec_id", "v", f"sqrt({_dot_sql('v', 'v')}) AS nv"
+    ).selectExpr("vec_id", "v", f"-array_max({_cell_sims_sql(crows)}).negc AS cell_id")
+
+
+def _cell_sims_sql(crows) -> str:
+    """SQL text of the k-element ``(sim, negc)`` struct array whose
+    ``array_max`` ``_assign_cells`` takes: the cosine of column ``v``
+    with each centroid of ``crows`` and its -cell_id. The row norm is
+    read from column ``nv`` (``sqrt(dot(v, v))``). Each centroid's norm
+    rides in the literal; one whose sum of squares overflows to inf has
+    no SQL literal, so it rides as NULL and the plan computes it."""
+    cells = []
+    for r in crows:
+        c = [float(x) for x in r.centroid]
+        n = _norm(c)
+        cells.append(Row(c=c, n=n if math.isfinite(n) else None, negc=-int(r.cell_id)))
+    nc = f"coalesce(s.n, sqrt({_dot_sql('s.c', 's.c')}))"
+    sim = _cosine_sql("v", "s.c", nx="nv", ny=nc)
+    return (
+        f"transform({_sql_text(cells)}, "
+        f"s -> named_struct('sim', {sim}, 'negc', s.negc))"
     )
 
 
@@ -481,7 +553,7 @@ def ivf_kmeans_topk_listing(
         .crossJoin(F.broadcast(cents))
         .select(
             "query_id", "qv", "cell_id",
-            cosine(F.col("qv"), F.col("centroid")).alias("cell_sim"),
+            cosine("qv", "centroid").alias("cell_sim"),
         )
     )
     wq = Window.partitionBy("query_id").orderBy(F.desc("cell_sim"), F.asc("cell_id"))
@@ -493,7 +565,7 @@ def ivf_kmeans_topk_listing(
     cands = assigned.select(
         F.col("vec_id").alias("cand_id"), "cell_id", F.col("v").alias("cv")
     )
-    sim = F.round(cosine(F.col("qv"), F.col("cv")), 6)
+    sim = F.round(cosine("qv", "cv"), 6)
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
     return (
         F.broadcast(probes)
@@ -534,7 +606,7 @@ def ivf_topk_listing(
             "query_id",
             "qv",
             "cell_id",
-            cosine(F.col("qv"), F.col("centroid")).alias("cell_sim"),
+            cosine("qv", "centroid").alias("cell_sim"),
         )
     )
     wq = Window.partitionBy("query_id").orderBy(F.desc("cell_sim"), F.asc("cell_id"))
@@ -545,7 +617,7 @@ def ivf_topk_listing(
     cands = vecs.select(
         F.col("vec_id").alias("cand_id"), F.col("label").alias("cell_id"), F.col("v").alias("cv")
     )
-    sim = F.round(cosine(F.col("qv"), F.col("cv")), 6)
+    sim = F.round(cosine("qv", "cv"), 6)
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
     return (
         F.broadcast(probes)
@@ -697,13 +769,13 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.array_sort(F.collect_list(F.struct("dim", "mean"))).alias("dm"))
         .select(
             "label",
-            F.transform("dm", lambda s: s.getField("mean")).alias("centroid"),
+            F.expr("transform(dm, x -> x.mean)").alias("centroid"),
         )
     )
     scored = vecs.join(F.broadcast(cent), "label").select(
         "vec_id",
         "label",
-        F.round(cosine(F.col("v"), F.col("centroid")), 6).alias("cos_centroid"),
+        F.round(cosine("v", "centroid"), 6).alias("cos_centroid"),
     )
     w = Window.partitionBy("label").orderBy(F.asc("cos_centroid"), F.asc("vec_id"))
     return (
@@ -895,7 +967,7 @@ def pq_topk_listing(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
     cands = vecs.select(F.col("vec_id").alias("cand_id"), F.col("v").alias("cv"))
-    sim = F.round(cosine(F.col("qv"), F.col("cv")), 6)
+    sim = F.round(cosine("qv", "cv"), 6)
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
     return (
         cands.join(F.broadcast(shortlist), "cand_id")
@@ -1030,7 +1102,7 @@ def ivfpq_topk_listing(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
     cands = vecs.select(F.col("vec_id").alias("cand_id"), F.col("v").alias("cv"))
-    sim = F.round(cosine(F.col("qv"), F.col("cv")), 6)
+    sim = F.round(cosine("qv", "cv"), 6)
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
     return (
         cands.join(F.broadcast(shortlist), "cand_id")
@@ -1260,12 +1332,18 @@ def knn_graph_ivf_listing(
        group with one GEMM under the ``_knn_rank`` convention and emits
        ranks 1..KNN_K directly — no local top-k, no window exchange.
 
-    Cell adjacency is driver-side numpy over the collected centroids
-    (cap-bounded: n_cells rows — the KMEANS_DRIVER_CAP doctrine), and
-    every collected cell must be a key of the route map, or raise: an
-    unmapped cell would route to NULL and explode would drop its rows
-    silently. Nothing is checkpointed: the returned DataFrame is a plain
-    lazy plan."""
+    Before the plan, two driver actions (3 Spark jobs): a stats aggregate
+    sizes a hash-of-id training sample bounded by KMEANS_TRAIN_PER_CELL
+    per label, and one collect brings that sample to the driver, where
+    ``_label_means`` computes the label centroids with the bits of
+    ``label_centroids`` over a one-partition scan, without its two
+    shuffles. The argmax of the map is one SQL expression
+    (``_assign_cells``). Cell adjacency is driver-side numpy over the
+    centroids (n_cells rows — the KMEANS_DRIVER_CAP doctrine), and every
+    centroid's cell must be a key of the route map, or raise: an unmapped
+    cell would route to NULL and explode would drop its rows silently.
+    Nothing is checkpointed: the returned DataFrame is a plain lazy
+    plan."""
     import numpy as np
 
     from .annindex import KMEANS_TRAIN_PER_CELL
@@ -1281,9 +1359,10 @@ def knn_graph_ivf_listing(
     # O(cells·128) while assignment/tiling stay corpus-wide and exact
     # within probed cells. Deterministic hash-of-id sample (the r05
     # doctrine: reproducible, id-domain-shape-independent). One bounded
-    # stats pass sizes the sample; recall pins re-verified on the
-    # clustered fixture (tests/test_ivf_clustered.py) and the isotropic
-    # driver corpus (knn_graph_ivf's oracle verdict).
+    # stats pass sizes the sample, which is small enough to train from on
+    # the driver; recall pins re-verified on the clustered fixture
+    # (tests/test_ivf_clustered.py) and the isotropic driver corpus
+    # (knn_graph_ivf's oracle verdict).
     stats = vecs.agg(
         F.count("*").alias("n"), F.approx_count_distinct("label").alias("nl")
     ).collect()[0]
@@ -1292,12 +1371,8 @@ def knn_graph_ivf_listing(
     if stats.n > cap:
         step = max(2, int(stats.n) // cap)
         train = vecs.filter(F.pmod(F.xxhash64("vec_id"), F.lit(step)) == 0)
-    cents = label_centroids(train)
-    crows = cents.collect()  # n_cells rows, bounded by construction
-    # crows shared with the pure-map assignment (optimization r11): the
-    # centroid build used to be evaluated TWICE — once inside the
-    # assignment's broadcast build and once by this collect.
-    assigned = _assign_cells(vecs.select("vec_id", "label", "v"), cents, crows=crows)
+    crows = _label_means(train.select("label", "v").collect())
+    assigned = _assign_cells(vecs, None, crows=crows)
     cid = np.array([r.cell_id for r in crows], dtype=np.int64)
     C = np.array([r.centroid for r in crows], dtype=np.float64)
     n = np.linalg.norm(C, axis=1)

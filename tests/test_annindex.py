@@ -587,11 +587,15 @@ def test_assign_cells_pure_map_matches_aggregate(spark):
     (similarity._assign_cells): the array_max-over-literal-centroids form
     must pick the EXACT winner the old broadcast-crossJoin +
     groupBy(vec_id).agg(max(struct(sim, -cell_id, v))) aggregate picked —
-    including the two edge classes that exercise the struct total order:
-    an exact cosine TIE between two cells (lowest cell_id must win) and a
-    ZERO-NORM vector (all sims NULL: lowest cell_id must win)."""
+    including the edge classes that exercise the struct total order:
+    an exact cosine TIE between two cells (lowest cell_id must win), a
+    ZERO-NORM vector (all sims NULL: lowest cell_id must win) and a
+    ZERO-NORM centroid (its sims are NULL, so it never wins over a
+    scoring cell, not even over a negative sim)."""
     from parallel_map_reduce_word_counter_for_one_machine_spark.operators.similarity import (
         _assign_cells,
+        _cell_sims_sql,
+        _dot_sql,
         cosine,
     )
 
@@ -606,7 +610,7 @@ def test_assign_cells_pure_map_matches_aggregate(spark):
         "vec_id LONG, v ARRAY<DOUBLE>",
     )
     cents = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [0.0, 0.0])],
         "cell_id LONG, centroid ARRAY<DOUBLE>",
     )
 
@@ -614,7 +618,7 @@ def test_assign_cells_pure_map_matches_aggregate(spark):
     scored = vecs.crossJoin(F.broadcast(cents)).select(
         "vec_id",
         F.struct(
-            cosine(F.col("v"), F.col("centroid")).alias("sim"),
+            cosine("v", "centroid").alias("sim"),
             (-F.col("cell_id")).alias("negc"),
             F.col("v"),
         ).alias("cand"),
@@ -631,6 +635,10 @@ def test_assign_cells_pure_map_matches_aggregate(spark):
     # and the documented edge-class outcomes explicitly
     got = {r.vec_id: r.cell_id for r in new.collect()}
     assert got == {0: 0, 1: 1, 2: 0, 3: 0, 4: 0}
+    sims = vecs.select(
+        "vec_id", "v", F.expr(f"sqrt({_dot_sql('v', 'v')})").alias("nv")
+    ).select(F.expr(_cell_sims_sql(cents.collect())).alias("s"))
+    assert all(r.s[2].sim is None and r.s[2].negc == -2 for r in sims.collect())
 
 
 def test_assign_cells_k_bound_falls_back_to_aggregate(spark):
@@ -689,6 +697,148 @@ def test_assign_cells_literal_plan_does_not_grow_with_k(spark):
         return out._jdf.queryExecution().analyzed().toString().count("lambdafunction")
 
     assert lambdas(2) == lambdas(8) > 0
+
+
+def test_assign_cells_plan_build_py4j_calls_do_not_grow_with_k(spark, monkeypatch):
+    """Building the literal-branch plan costs a small, fixed number of py4j
+    round trips whatever k is: the argmax is one SQL text handed over in
+    one call, not a Python lambda built through the gateway."""
+    from parallel_map_reduce_word_counter_for_one_machine_spark.operators.similarity import (
+        _assign_cells,
+    )
+
+    vecs = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "vec_id LONG, v ARRAY<DOUBLE>"
+    )
+    crows = spark.createDataFrame(
+        [(i, [float(i + 1), 1.0]) for i in range(8)],
+        "cell_id LONG, centroid ARRAY<DOUBLE>",
+    ).collect()
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting_send(command, *args, **kwargs):
+        # reference releases of collected Python objects go through here too
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            calls.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting_send)
+
+    def build_calls(k):
+        calls.clear()
+        _assign_cells(vecs, None, crows=crows[:k])
+        return len(calls)
+
+    build_calls(1)  # first use of a JVM class or method costs extra calls
+    n2, n8 = build_calls(2), build_calls(8)
+    assert n2 == n8 < 40, (n2, n8)
+
+
+def test_hoisted_norms_keep_the_cosine_bits(spark):
+    """The driver-side centroid norm equals the JVM's ``sqrt(dot(c, c))``
+    bit for bit, down to subnormals and through overflow to inf, and the
+    hoisted-norm sims of ``_assign_cells`` equal ``cosine``'s: a centroid
+    whose sum of squares overflows rides as NULL and is computed in the
+    plan instead. With finite norms the optimized plan holds two dot
+    products: the row's norm and the one dot product per centroid."""
+    import struct
+
+    from pyspark.sql import Row
+
+    from parallel_map_reduce_word_counter_for_one_machine_spark.operators.similarity import (
+        _assign_cells,
+        _cell_sims_sql,
+        _dot_sql,
+        _norm,
+        cosine,
+    )
+
+    def bits(x):
+        return None if x is None else struct.pack("<d", x)
+
+    cents = [
+        [0.1] * 64,
+        [1e-300, 3.0, -1e-300],
+        [5e-324, 5e-324, 0.0],
+        [1.7976931348623157e308, 1.0],
+        [1.3e154, 1.3e154],  # each square finite, their sum overflows
+        [0.0, 0.0],
+    ]
+    cdf = spark.createDataFrame(
+        [(i, c) for i, c in enumerate(cents)], "cell_id LONG, c ARRAY<DOUBLE>"
+    )
+    jvm = cdf.select("cell_id", F.expr(f"sqrt({_dot_sql('c', 'c')})").alias("n"))
+    got = {r.cell_id: bits(r.n) for r in jvm.collect()}
+    assert got == {i: bits(_norm(c)) for i, c in enumerate(cents)}
+    assert _norm(cents[3]) == _norm(cents[4]) == float("inf")
+
+    rows = [[0.3, -0.2], [1e-300, 2.0], [1.3e154, -1.3e154], [0.0, 0.0]]
+    vecs = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(rows)], "vec_id LONG, v ARRAY<DOUBLE>"
+    )
+    crows = [Row(cell_id=i, centroid=c) for i, c in enumerate(cents[1:])]
+    hoisted = vecs.select(
+        "vec_id", "v", F.expr(f"sqrt({_dot_sql('v', 'v')})").alias("nv")
+    ).select("vec_id", F.expr(_cell_sims_sql(crows)).alias("s"))
+    plain = vecs.crossJoin(cdf.filter("cell_id > 0")).select(
+        "vec_id", "cell_id", cosine("v", "c").alias("sim")
+    )
+    want = {(r.vec_id, r.cell_id - 1): bits(r.sim) for r in plain.collect()}
+    have = {
+        (r.vec_id, -s.negc): bits(s.sim) for r in hoisted.collect() for s in r.s
+    }
+    assert have == want
+    assert want[(2, 3)] is not None  # the overflow pair has a sim to compare
+    # finite norms: the row norm once per row and one dot per centroid
+    plan = _assign_cells(vecs, None, crows=crows[:2])._jdf.queryExecution()
+    assert plan.optimizedPlan().toString().count("aggregate(zip_with") == 2
+
+
+def test_label_means_match_label_centroids_bits(spark):
+    """``_label_means`` over collected rows equals ``label_centroids`` bit
+    for bit on a one-partition relation — sequential sums divided by the
+    count, which is what ``avg`` does over one scan partition — and skips
+    a NULL vector as ``avg`` does. A NULL label, a NULL element and
+    vectors of different lengths raise ValueError."""
+    import struct
+
+    from pyspark.sql import Row
+
+    from parallel_map_reduce_word_counter_for_one_machine_spark.operators.similarity import (
+        _label_means,
+        label_centroids,
+    )
+
+    rows = [
+        (i, i % 3, [0.1 * i + 1e-17 * j, 1.0 / (i + 1), -(0.7**i), 3e-310 * j])
+        for i, j in zip(range(40), range(40, 0, -1))
+    ]
+    rows.append((40, 1, None))
+    df = spark.createDataFrame(rows, "vec_id LONG, label INT, v ARRAY<DOUBLE>")
+    df = df.coalesce(1)
+    assert df.rdd.getNumPartitions() == 1
+
+    def bits(crows):
+        return [
+            (r.cell_id, [struct.pack("<d", x) for x in r.centroid]) for r in crows
+        ]
+
+    want = sorted(label_centroids(df).collect(), key=lambda r: r.cell_id)
+    got = _label_means(df.select("label", "v").collect())
+    assert bits(got) == bits(want)
+    assert [r.cell_id for r in got] == [0, 1, 2]
+
+    for bad in (
+        [Row(label=1, v=[1.0, 2.0]), Row(label=None, v=[1.0, 2.0])],
+        [Row(label=1, v=[1.0, 2.0]), Row(label=2, v=[1.0])],
+        [Row(label=1, v=[1.0, None])],
+    ):
+        with pytest.raises(ValueError):
+            _label_means(bad)
 
 
 def test_plan_literal_round_trips_float64_bits(spark):

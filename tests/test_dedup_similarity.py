@@ -1217,3 +1217,21 @@ def test_knn_graph_ivf_matches_probed_brute_force(spark, tmp_path, nprobe):
         for r in S.knn_graph_ivf_listing(spark, str(tmp_path), nprobe=nprobe).collect()
     }
     assert got == want
+
+
+def test_knn_graph_ivf_listing_starts_three_jobs_before_its_action(spark, sf_dir):
+    """Building the IVF k-NN listing runs at most 3 Spark jobs before the
+    caller's action: the stats aggregate and one collect of the training
+    sample, whose label means are taken on the driver (no posexplode and
+    two shuffles feeding a centroid collect)."""
+    sc = spark.sparkContext._jsc.sc()
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+
+    def job_ids():
+        sc.listenerBus().waitUntilEmpty()
+        return {j.jobId() for j in conv.asJava(sc.statusStore().jobsList(None))}
+
+    before = job_ids()
+    S.knn_graph_ivf_listing(spark, sf_dir)
+    started = job_ids() - before
+    assert len(started) <= 3, sorted(started)

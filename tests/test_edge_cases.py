@@ -77,7 +77,7 @@ def test_cosine_zero_vector_is_null_not_crash(spark):
     a, b = df.alias("a"), df.alias("b")
     out = (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(S.cosine(F.col("a.v"), F.col("b.v")).alias("cos"))
+        .select(S.cosine("a.v", "b.v").alias("cos"))
         .collect()
     )
     assert out[0].cos is None

@@ -136,7 +136,10 @@ NOTES = {
     "shuffle → reduce: explode(element_at(route map literal, cell_id)) — "
     "no join — sends each vector to its own cell's group and, as a "
     "candidate, to every group that probes its cell (the map is driver "
-    "numpy over n_cells centroids); the cell argmax runs once per row; ONE "
+    "numpy over n_cells centroids, label means of one collected training "
+    "sample); the cell argmax runs once per row as one SQL expression: the "
+    "row norm is projected once (the Project below it) and each centroid's "
+    "norm rides in the literal, so one dot product per (row, centroid); ONE "
     "grp exchange feeds the _knn_cell_topk grouped kernel, which emits "
     "final ranks — the corpus is replicated ~nprobe times, no window, no "
     "checkpoint; recall verdict: knn_graph_ivf",

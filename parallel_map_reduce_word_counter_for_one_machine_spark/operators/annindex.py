@@ -34,24 +34,29 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..registry import query
 from ..session import session_artifact
 from .similarity import (
     _IVF_VERDICT_ORACLE,
+    _kmeans_rows,
+    _pq_encode,
+    _pq_pairs,
+    _pq_rerank,
+    _probe_mask,
+    _query_matrix,
     _recall_verdict,
+    _train_sample,
     _train_subspace_codebooks,
+    _unit_centroids,
+    _unit_rows,
     _vectors,
-    cosine,
     IVFPQ_N_PROBE,
     kmeans_centroids,
     label_centroids,
-    N_QUERIES,
     PQ_M,
     PQ_SHORTLIST,
     PQ_TRAIN_CAP,
-    TOP_K,
     similarity_topk,
 )
 
@@ -122,28 +127,11 @@ IVFPQ_KMEANS_PROBE = 5
 _train_residual_codebooks = _train_subspace_codebooks
 
 
-# Coarse-quantizer training subsample: ~128 points per centroid —
-# measured on the 50 k bulk corpus, 36/cell under-trains (recall 0.52 →
-# 0.32) while ~128/cell matches full-corpus training; FAISS guidance is
-# the same 39–256/centroid band. Deterministic HASH-of-id sample (not
-# .sample(): reproducible across runs/partitionings; not raw
-# ``vec_id % step``: a sparse or strided id domain — e.g. the re-keyed
-# doc_id + copy·1e6 pattern used elsewhere in this repo — would make a
-# modulo sample far off the cap or empty, degenerating the k-means
-# (r05 advice)).
-KMEANS_TRAIN_PER_CELL = 128
-
-
-def _coarse_centroids(
-    spark: SparkSession,
-    vecs: DataFrame,
-    n_cells: int | None,
-    dim: int,
-    full_sample=None,
-):
+def _coarse_centroids(vecs: DataFrame, n_cells: int | None, full_sample=None):
     """(cell_ids, C raw, Cn normalized) for either quantizer mode: trained
-    k-means cells, or the label column's per-label means (distributed agg,
-    collected — cells×dim driver state either way).
+    k-means cells on a ``similarity._train_sample`` of ``vecs``, or the
+    label column's per-label means (distributed agg, collected — cells×dim
+    driver state either way).
 
     ``full_sample``: rows the caller ALREADY collected that are known to
     cover the whole corpus (build_ivfpq_index's residual-training sample
@@ -151,52 +139,66 @@ def _coarse_centroids(
     straight on them (similarity._kmeans_rows, same values as the
     DataFrame path's literal round-trip), skipping the count + re-collect
     jobs. At scale the sample never covers the corpus and the subsampled
-    distributed path below runs instead (r08, ivfpq_kmeans_probe cold)."""
+    distributed path runs instead (r08, ivfpq_kmeans_probe cold)."""
     import numpy as np
 
-    from .similarity import _kmeans_rows
-
-    if n_cells is not None:
-        if full_sample is not None:
-            ids, C = _kmeans_rows(full_sample, k=n_cells, iters=3)
-            cell_ids = np.array([int(c) for c in ids])
+    if n_cells is not None and full_sample is not None:
+        ids, C = _kmeans_rows(full_sample, k=n_cells, iters=3)
+        cell_ids = np.array([int(c) for c in ids])
+    else:
+        if n_cells is None:
+            cents = label_centroids(vecs)
         else:
-            n = vecs.count()
-            cap = KMEANS_TRAIN_PER_CELL * n_cells
-            train = vecs
-            if n > cap:
-                step = max(2, n // cap)
-                # hash-of-id sample: id-domain-shape-independent (r05 advice)
-                train = vecs.filter(
-                    F.pmod(F.xxhash64(F.col("vec_id")), F.lit(step)) == 0
-                )
-            crows = kmeans_centroids(train, k=n_cells, iters=3, dim=dim).collect()
-            cell_ids = np.array([int(r.cell_id) for r in crows])
-            C = np.array([r.centroid for r in crows], dtype=np.float64)
-        Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-        return cell_ids, C, Cn
-    crows = label_centroids(vecs).collect()  # (cell_id, centroid) rows
-    cell_ids = np.array([int(r.cell_id) for r in crows])
-    C = np.array([r.centroid for r in crows], dtype=np.float64)
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-    return cell_ids, C, Cn
+            train = _train_sample(vecs, vecs.count(), n_cells)
+            cents = kmeans_centroids(train, k=n_cells, iters=3)
+        crows = cents.collect()  # (cell_id, centroid) rows
+        cell_ids = np.array([int(r.cell_id) for r in crows])
+        C = np.array([r.centroid for r in crows], dtype=np.float64)
+    return cell_ids, C, _unit_centroids(C)
 
 
-def _encode_codes(
-    vecs: DataFrame, books, cell_ids, Cn, pq_m: int, use_kmeans: bool
-) -> DataFrame:
+def _cell_rows(Xn, labels, cell_ids, Cn, use_kmeans: bool):
+    """Row in ``cell_ids``/``Cn`` of each unit vector's coarse cell: its
+    most similar centroid (k-means quantizer, first row on ties) or the
+    cell of its label (label quantizer)."""
+    import numpy as np
+
+    if use_kmeans:
+        return np.argmax(Xn @ Cn.T, axis=1)
+    row_of = {int(c): i for i, c in enumerate(cell_ids)}
+    return np.array([row_of[int(l)] for l in labels], dtype=np.int64)
+
+
+def _read_quantizers(index_root: str):
+    """The persisted quantizers of an index, read from its codebooks and
+    centroids sidecars: (books (M, KSUB, dsub), cell ids, unit-norm
+    centroids) — the frozen state every append and probe uses."""
+    import numpy as np
+
+    cb = _read_driver_table(os.path.join(index_root, "codebooks"))
+    books = np.zeros(
+        (max(r["m"] for r in cb) + 1, max(r["k"] for r in cb) + 1, len(cb[0]["sub"]))
+    )
+    for r in cb:
+        books[r["m"], r["k"]] = r["sub"]
+    crows = _read_driver_table(os.path.join(index_root, "centroids"))
+    cell_ids = np.array([int(r["cell"]) for r in crows], dtype=np.int64)
+    C = np.array([r["centroid"] for r in crows], dtype=np.float64)
+    return books, cell_ids, _unit_centroids(C)
+
+
+def _encode_codes(vecs: DataFrame, books, cell_ids, Cn, use_kmeans: bool) -> DataFrame:
     """ONE distributed Arrow encode pass: assign each vector to its coarse
     cell (nearest trained centroid, or the label column) and PQ-encode the
-    residual x̂ − ĉ_cell against the given codebooks. Shared by the one-off
-    build and the incremental append — an appended vector must be encoded
-    against the FROZEN quantizers bit-identically to a built one."""
+    residual x̂ − ĉ_cell against the given codebooks (``_pq_encode``, the
+    in-query PQ tiers' encoder). Shared by the one-off build and the
+    incremental append — an appended vector must be encoded against the
+    FROZEN quantizers bit-identically to a built one."""
     import numpy as np
     import pandas as pd
 
     from pyspark.sql import types as T
 
-    dsub = books.shape[2]
-    row_of = {int(c): i for i, c in enumerate(cell_ids)}
     out_schema = T.StructType(
         [
             T.StructField("vec_id", T.LongType()),
@@ -210,33 +212,17 @@ def _encode_codes(
         for pdf in batches:
             if len(pdf) == 0:
                 continue  # empty Arrow batch: shape-(0,) array breaks axis=1
-            X = np.array(list(pdf["v"]), dtype=np.float64)
-            ids = pdf["vec_id"].to_numpy()
-            norm = np.linalg.norm(X, axis=1, keepdims=True)
-            ok = norm[:, 0] > 0  # zero-norm rows are unindexable (NULL cosine)
-            X, ids = X[ok] / norm[ok], ids[ok]
+            # zero-norm rows are unindexable (NULL cosine)
+            ok, X = _unit_rows(np.array(list(pdf["v"]), dtype=np.float64))
+            ids = pdf["vec_id"].to_numpy()[ok]
             if len(X) == 0:
                 continue  # all-zero-norm batch: empty index arrays below
-            if use_kmeans:
-                rows = np.argmax(X @ Cn.T, axis=1)
-            else:
-                rows = np.array(
-                    [row_of[int(l)] for l in pdf["label"].to_numpy()[ok]],
-                    dtype=np.int64,
-                )
-            cells = cell_ids[rows]
-            R = X - Cn[rows]
-            codes = np.empty((len(X), pq_m), dtype=np.uint8)
-            qerr = np.zeros(len(X))
-            for m in range(pq_m):
-                Sm = R[:, m * dsub : (m + 1) * dsub]
-                d2 = ((Sm[:, None, :] - books[m][None, :, :]) ** 2).sum(axis=2)
-                codes[:, m] = d2.argmin(axis=1)
-                qerr += d2.min(axis=1)
+            rows = _cell_rows(X, pdf["label"].to_numpy()[ok], cell_ids, Cn, use_kmeans)
+            codes, qerr = _pq_encode(X - Cn[rows], books)
             yield pd.DataFrame(
                 {
                     "vec_id": ids,
-                    "cell": cells,
+                    "cell": cell_ids[rows],
                     "code": [c.tobytes() for c in codes],
                     # per-vector squared PQ reconstruction error — the
                     # drift statistic's raw material, queryable per slice
@@ -301,21 +287,13 @@ def build_ivfpq_index(
     # the whole corpus — hand it to the kmeans so training skips its own
     # count + collect jobs (bench-visible on the cold build)
     cell_ids, C, Cn = _coarse_centroids(
-        spark, vecs, n_cells, dim,
-        full_sample=srows if len(srows) < train_cap else None,
+        vecs, n_cells, full_sample=srows if len(srows) < train_cap else None
     )
-    dsub = dim // pq_m
     train_max_id = max((int(r.vec_id) for r in srows), default=-1)
-    S = np.array([r.v for r in srows], dtype=np.float64)
-    nrm = np.linalg.norm(S, axis=1, keepdims=True)
-    keep = nrm[:, 0] > 0
-    Sn = S[keep] / nrm[keep]
-    if n_cells is not None:
-        s_cells = np.argmax(Sn @ Cn.T, axis=1)
-    else:
-        labels = np.array([r.label for r in srows])[keep]
-        row_of = {int(c): i for i, c in enumerate(cell_ids)}
-        s_cells = np.array([row_of[int(l)] for l in labels])
+    use_kmeans = n_cells is not None
+    keep, Sn = _unit_rows(np.array([r.v for r in srows], dtype=np.float64))
+    labels = np.array([r.label for r in srows])[keep]
+    s_cells = _cell_rows(Sn, labels, cell_ids, Cn, use_kmeans)
     # pq_m is the bytes/vector ↔ recall knob (the probe reads M and dsub
     # back from the codebooks table, so no reader change): 16 B suffices
     # at sf scale; the 50 k clustered corpus needs 32 B for recall ≥ the
@@ -369,8 +347,7 @@ def build_ivfpq_index(
     # partitioned by cell — persisted so the stats aggregate below reads
     # the in-memory codes instead of re-listing + re-scanning the fresh
     # parquet (same values: qerr is a written column)
-    use_kmeans = n_cells is not None
-    enc = _encode_codes(vecs, books, cell_ids, Cn, pq_m, use_kmeans).persist()
+    enc = _encode_codes(vecs, books, cell_ids, Cn, use_kmeans).persist()
     enc.write.mode("overwrite").partitionBy("cell").parquet(
         os.path.join(index_root, "codes")
     )
@@ -445,26 +422,12 @@ def append_to_ivfpq_index(
     inference silently drop the cell's pre-existing codes. Every entry
     point of the index (append, delete, probe scan) heals on entry, so
     that inference is always valid when heal itself runs."""
-    import numpy as np
-
     _heal_delete_swap(index_root)
-    cb = _read_driver_table(os.path.join(index_root, "codebooks"))
-    n_m = max(r["m"] for r in cb) + 1
-    n_k = max(r["k"] for r in cb) + 1
-    dsub = len(cb[0]["sub"])
-    books = np.zeros((n_m, n_k, dsub))
-    for r in cb:
-        books[r["m"], r["k"]] = r["sub"]
-    crows = _read_driver_table(os.path.join(index_root, "centroids"))
-    cell_ids = np.array([int(r["cell"]) for r in crows])
-    C = np.array([r["centroid"] for r in crows], dtype=np.float64)
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
+    books, cell_ids, Cn = _read_quantizers(index_root)
     stats = _read_driver_table(os.path.join(index_root, "stats"))[0]
     use_kmeans = stats["quantizer"] == "kmeans"
 
-    enc = _encode_codes(
-        new_vecs, books, cell_ids, Cn, int(stats["pq_m"]), use_kmeans
-    ).persist()
+    enc = _encode_codes(new_vecs, books, cell_ids, Cn, use_kmeans).persist()
     try:
         enc.write.mode("append").partitionBy("cell").parquet(
             os.path.join(index_root, "codes")
@@ -713,41 +676,21 @@ def ivfpq_pruned_topk_listing(
     tables, so the same code serves both quantizers — ``n_cells`` only
     selects which persisted index to open."""
     import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
 
     root = index_root or ivfpq_index_dir(spark, sf_dir, n_cells=n_cells)
 
     # small index tables -> driver state (M·KSUB codewords, cells×dim),
     # read driver-side via pyarrow — no Spark jobs for a few KB (r08)
-    cb = _read_driver_table(os.path.join(root, "codebooks"))
-    n_m = max(r["m"] for r in cb) + 1
-    n_k = max(r["k"] for r in cb) + 1
-    dsub = len(cb[0]["sub"])
-    books = np.zeros((n_m, n_k, dsub))
-    for r in cb:
-        books[r["m"], r["k"]] = r["sub"]
-    crows = _read_driver_table(os.path.join(root, "centroids"))
-    cells = [int(r["cell"]) for r in crows]
-    C = np.array([r["centroid"] for r in crows], dtype=np.float64)
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-
-    qrows = _vectors(spark, sf_dir).filter(F.col("vec_id") < N_QUERIES).collect()
-    q_ids = np.array([r.vec_id for r in qrows])
-    Q = np.array([r.v for r in qrows], dtype=np.float64)
-    qn = np.linalg.norm(Q, axis=1, keepdims=True)
-    keep = qn[:, 0] > 0
-    q_ids, Qn = q_ids[keep], Q[keep] / qn[keep]
+    books, cells_arr, Cn = _read_quantizers(root)
+    n_m, _, dsub = books.shape
+    vecs = _vectors(spark, sf_dir)
+    q_ids, Qn = _query_matrix(vecs)
 
     # per-query probe sets as a boolean query×cell MEMBERSHIP MATRIX
     # (vectorized candidate filtering below — r05 advice) + the union
     # that drives partition pruning
     cell_sims = Qn @ Cn.T
-    probe_mask = np.zeros((len(q_ids), len(cells)), dtype=bool)
-    for i in range(len(q_ids)):
-        probe_mask[i, np.argsort(-cell_sims[i])[:n_probe]] = True
-    cells_arr = np.array(cells, dtype=np.int64)
+    probe_mask = _probe_mask(cell_sims, n_probe)
     probed = sorted(int(c) for c in cells_arr[probe_mask.any(axis=0)])
     # vectorized cell-id -> centroid-row lookup for arbitrary cell ids
     cell_order = np.argsort(cells_arr)
@@ -758,14 +701,6 @@ def ivfpq_pruned_topk_listing(
     # q̂·ĉ_cell + Σ_m lut[q, m, code_m] (see build_ivfpq_index docstring)
     lut = np.einsum(
         "qmd,mkd->qmk", Qn.reshape(len(Qn), n_m, dsub), books
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("cand_id", T.LongType()),
-            T.StructField("pq_score", T.DoubleType()),
-        ]
     )
     m_idx = np.arange(n_m)
 
@@ -788,43 +723,10 @@ def ivfpq_pruned_topk_listing(
             # score[pair] = q̂·ĉ_cell(cand) + sum_m lut[q, m, code_m]
             s = lut[qi[:, None], m_idx[None, :], codes[ci]].sum(axis=1)
             s = s + cell_sims[qi, cand_rows[ci]]
-            qsel, csel = q_ids[qi], ids[ci]
-            keep = qsel != csel
-            yield pd.DataFrame(
-                {
-                    "query_id": qsel[keep],
-                    "cand_id": csel[keep],
-                    "pq_score": s[keep],
-                }
-            )
+            yield _pq_pairs(q_ids[qi], ids[ci], s)
 
-    scored = probed_codes_scan(spark, root, probed).mapInPandas(
-        adc, schema=out_schema
-    )
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round("pq_score", 6)), F.asc("cand_id")
-    )
-    shortlisted = (
-        scored.withColumn("srk", F.row_number().over(w_short))
-        .filter(F.col("srk") <= shortlist)
-        .select("query_id", "cand_id")
-    )
     # exact re-rank: raw vectors only for |queries|×L shortlist rows
-    vecs = _vectors(spark, sf_dir)
-    queries = vecs.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    cands = vecs.select(F.col("vec_id").alias("cand_id"), F.col("v").alias("cv"))
-    sim = F.round(cosine("qv", "cv"), 6)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
-    return (
-        cands.join(F.broadcast(shortlisted), "cand_id")
-        .join(F.broadcast(queries), "query_id")
-        .select("query_id", "cand_id", sim.alias("cos_sim"))
-        .filter(F.col("cos_sim").isNotNull())
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-    )
+    return _pq_rerank(vecs, probed_codes_scan(spark, root, probed), adc, shortlist)
 
 
 @query("similarity_topk_ivfpq_pruned", oracle=_IVF_VERDICT_ORACLE)

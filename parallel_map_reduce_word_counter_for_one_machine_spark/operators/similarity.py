@@ -1,19 +1,32 @@
 """Similarity search over the ``embeddings`` table (array<float>[64]).
 
-Two tiers (driver contract § north-star extensions):
+Tiers of the query × corpus top-k (driver contract § north-star
+extensions), each with an unregistered listing and a registered face:
 
-- ``similarity_topk``     — exact brute-force cosine top-k: the correctness
-  baseline. Query side is broadcast (|queries| ≪ |corpus|), the corpus scan
-  is linear, ranking is a per-query window — no all-pairs shuffle.
-- ``similarity_topk_ivf`` — IVF (inverted-file) approximate variant: a
-  coarse quantizer assigns every vector to its nearest centroid; queries
-  probe only the ``nprobe`` nearest cells. At 100 TB the corpus is
-  partitioned/bucketed by cell id so a probe touches only matching
-  partitions (partition pruning), turning top-k from a full scan into a
-  few-cell scan. Centroids here are per-label means (the synthetic data's
-  natural clusters — a k-means step would produce them the same shape).
+- Exact: ``similarity_topk`` — brute-force cosine top-k, the correctness
+  baseline. Query side is broadcast (|queries| ≪ |corpus|), the corpus
+  scan is linear, ranking is a per-query window — no all-pairs shuffle.
+  ``similarity_topk_pandas`` is its Arrow/numpy twin.
+- IVF (inverted file): a coarse quantizer assigns every vector to a cell;
+  queries probe only the ``nprobe`` nearest cells. The cells are the
+  labels (``ivf_topk_listing``) or trained k-means centroids
+  (``ivf_kmeans_topk_listing``). At 100 TB the corpus is partitioned by
+  cell id so a probe touches only matching partitions.
+- PQ (product quantization): ``pq_topk_listing`` scores reconstructed
+  16-code vectors, then re-ranks a shortlist exactly.
+- IVF ∘ PQ: ``ivfpq_topk_listing`` does both in the query; the persisted,
+  partition-pruned index form is ``annindex.ivfpq_pruned_topk_listing``.
 
-All vector math is JVM-side ``zip_with``/``aggregate`` in double —
+The corpus × corpus k-NN graph has an exact (``knn_graph``) and an IVF
+(``knn_graph_ivf_listing``) tier.
+
+A listing is its quantizer plus calls into the shared stages below: the
+query relation (``_queries``) and its driver twin (``_query_matrix``),
+the exact top-k tail (``_exact_topk``), the numpy probe choice
+(``_probe_mask``), the PQ encode (``_pq_encode``/``_pq_decode``) and the
+shortlist → exact re-rank (``_pq_rerank``).
+
+All JVM-side vector math is ``zip_with``/``aggregate`` in double —
 sequential accumulation matching the DuckDB oracle bit-for-bit before the
 6dp rounding that stabilizes rank boundaries.
 """
@@ -130,6 +143,58 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _queries(vecs: DataFrame, nq: int) -> DataFrame:
+    """The query side of every top-k listing: the vectors with
+    ``vec_id < nq``, as (query_id, qv)."""
+    return vecs.filter(F.col("vec_id") < nq).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+    )
+
+
+def _exact_topk(pairs: DataFrame) -> DataFrame:
+    """The exact tail of every top-k listing: over (query_id, cand_id, qv,
+    cv) candidate pairs, the 6dp-rounded cosine, zero-norm pairs dropped
+    (see ``cosine``), and each query's TOP_K under (cos_sim desc, cand_id
+    asc) — one window exchange keyed by query_id."""
+    sim = F.round(cosine("qv", "cv"), 6)
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
+    return (
+        pairs.select("query_id", "cand_id", sim.alias("cos_sim"))
+        .filter(F.col("cos_sim").isNotNull())
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= TOP_K)
+    )
+
+
+def _unit_rows(X):
+    """(keep, X[keep] scaled to unit L2 norm): zero-norm rows have no
+    cosine (``cosine`` is NULL for them), so the numpy kernels drop them
+    as the JVM listings filter their NULLs."""
+    import numpy as np
+
+    norm = np.linalg.norm(X, axis=1, keepdims=True)
+    keep = norm[:, 0] > 0
+    return keep, X[keep] / norm[keep]
+
+
+def _query_matrix(vecs: DataFrame):
+    """Driver twin of ``_queries(vecs, N_QUERIES)`` for the numpy kernels:
+    (query ids, unit-norm query matrix), zero-norm queries dropped. With
+    no query ids in the corpus the matrix has 0 rows but the corpus's
+    width (read with one ``first()`` only then), so every product with it
+    is empty and the listing is empty, as ``similarity_topk`` is."""
+    import numpy as np
+
+    rows = _queries(vecs, N_QUERIES).collect()
+    if rows:
+        Q = np.array([r.qv for r in rows], dtype=np.float64)
+    else:
+        first = vecs.select("v").first()
+        Q = np.zeros((0, len(first.v) if first else 0))
+    keep, Qn = _unit_rows(Q)
+    return np.array([r.query_id for r in rows], dtype=np.int64)[keep], Qn
+
+
 # Shared by similarity_topk and its Arrow/numpy twin: both produce the
 # identical rounded-6dp top-k relation, so both are held to the same hard
 # value oracle (the numpy path's different float summation order has never
@@ -161,20 +226,10 @@ def similarity_topk(
     N_QUERIES (the clustered-fixture recall measurement widens the query
     sample so a 0.9 recall bound isn't judged on 50 edges)."""
     vecs = _vectors(spark, sf_dir)
-    nq = n_queries if n_queries is not None else N_QUERIES
-    queries = vecs.filter(F.col("vec_id") < nq).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
+    queries = _queries(vecs, n_queries if n_queries is not None else N_QUERIES)
     cands = vecs.select(F.col("vec_id").alias("cand_id"), F.col("v").alias("cv"))
-    sim = F.round(cosine("qv", "cv"), 6)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
-    return (
-        F.broadcast(queries)
-        .join(cands, F.col("cand_id") != F.col("query_id"))
-        .select("query_id", "cand_id", sim.alias("cos_sim"))
-        .filter(F.col("cos_sim").isNotNull())  # zero-norm rows: see cosine()
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
+    return _exact_topk(
+        F.broadcast(queries).join(cands, F.col("cand_id") != F.col("query_id"))
     )
 
 
@@ -192,13 +247,7 @@ def similarity_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
 
     vecs = _vectors(spark, sf_dir)
-    qrows = vecs.filter(F.col("vec_id") < N_QUERIES).collect()  # tiny query set
-    q_ids = np.array([r.vec_id for r in qrows])
-    Q = np.array([r.v for r in qrows], dtype=np.float64)
-    qnorm = np.linalg.norm(Q, axis=1, keepdims=True)
-    keep = qnorm[:, 0] > 0  # zero-norm query ≡ JVM twin's NULL: no results
-    q_ids, Q, qnorm = q_ids[keep], Q[keep], qnorm[keep]
-    Qn = Q / qnorm
+    q_ids, Qn = _query_matrix(vecs)  # tiny query set
 
     out_schema = T.StructType(
         [
@@ -212,17 +261,13 @@ def similarity_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue  # empty Arrow batch: shape-(0,) array breaks axis=1
-            C = np.array(list(pdf["v"]), dtype=np.float64)
-            ids = pdf["vec_id"].to_numpy()
             # Zero-norm candidates (padding/failed-encode rows) would give
             # NaN cosine, and NaN sorts ABOVE all values in Spark's desc
             # order — they'd dominate every top-k. Drop them instead, which
             # matches the JVM twin (cosine() → NULL → sorted last, never in
             # a top-k).
-            norm = np.linalg.norm(C, axis=1, keepdims=True)
-            ok = norm[:, 0] > 0
-            C, ids, norm = C[ok], ids[ok], norm[ok]
-            Cn = C / norm
+            ok, Cn = _unit_rows(np.array(list(pdf["v"]), dtype=np.float64))
+            ids = pdf["vec_id"].to_numpy()[ok]
             S = Cn @ Qn.T  # (batch, n_queries)
             out = pd.DataFrame(
                 {
@@ -249,15 +294,20 @@ def label_centroids(vecs: DataFrame) -> DataFrame:
     posexplode → (label, dim) avg → collect back to arrays. Two narrow
     shuffles over |corpus|·64 rows; at 100 TB this is the one-off index
     build step (or replaced by k-means emitting the same schema)."""
-    exploded = vecs.select("label", F.posexplode("v").alias("dim", "val"))
-    means = exploded.groupBy("label", "dim").agg(F.avg("val").alias("mean"))
+    return _key_means(vecs, "label").withColumnRenamed("label", "cell_id")
+
+
+def _key_means(vecs: DataFrame, key: str) -> DataFrame:
+    """(key, centroid): the element-wise mean of ``v`` per value of the
+    column ``key`` — posexplode → (key, dim) ``avg`` → the means collected
+    back into an array in dim order. The one per-key mean pipeline of the
+    label cells, the k-means loop and ``embedding_outliers``."""
+    exploded = vecs.select(key, F.posexplode("v").alias("dim", "val"))
+    means = exploded.groupBy(key, "dim").agg(F.avg("val").alias("mean"))
     return (
-        means.groupBy("label")
+        means.groupBy(key)
         .agg(F.array_sort(F.collect_list(F.struct("dim", "mean"))).alias("dm"))
-        .select(
-            F.col("label").alias("cell_id"),
-            F.expr("transform(dm, x -> x.mean)").alias("centroid"),
-        )
+        .select(key, F.expr("transform(dm, x -> x.mean)").alias("centroid"))
     )
 
 
@@ -290,6 +340,30 @@ def _label_means(rows) -> list:
     return [
         Row(cell_id=c, centroid=[x / counts[c] for x in sums[c]]) for c in sorted(sums)
     ]
+
+
+# Coarse-quantizer training subsample: ~128 points per centroid —
+# measured on the 50 k bulk corpus, 36/cell under-trains (recall 0.52 →
+# 0.32) while ~128/cell matches full-corpus training; FAISS guidance is
+# the same 39–256/centroid band.
+KMEANS_TRAIN_PER_CELL = 128
+
+
+def _train_sample(vecs: DataFrame, n: int, n_cells: int) -> DataFrame:
+    """The coarse quantizer's training rows out of ``vecs``' ``n`` rows:
+    all of them up to KMEANS_TRAIN_PER_CELL·n_cells, else the rows whose
+    xxhash64(vec_id) is 0 modulo n // cap (at least 2), about cap rows.
+    A deterministic HASH-of-id sample (not .sample(): reproducible across
+    runs and partitionings; not raw ``vec_id % step``: a sparse or
+    strided id domain — e.g. the re-keyed doc_id + copy·1e6 pattern used
+    elsewhere in this repo — would make a modulo sample far off the cap
+    or empty, degenerating the quantizer (r05 advice)). The sample is
+    label-blind, so a rare label can miss its cell's training points."""
+    cap = KMEANS_TRAIN_PER_CELL * n_cells
+    if n <= cap:
+        return vecs
+    step = max(2, n // cap)
+    return vecs.filter(F.pmod(F.xxhash64("vec_id"), F.lit(step)) == 0)
 
 
 # Bound under which Lloyd's runs driver-side in numpy (r08, VERDICT item
@@ -415,18 +489,7 @@ def kmeans_centroids(
     # _kmeans_driver round-trip), never a pickled local relation.
     crows = init.collect()
     for _ in range(iters):
-        assigned = _assign_cells(vecs, None, crows=crows)
-        exploded = assigned.select("cell_id", F.posexplode("v").alias("dim", "val"))
-        means = exploded.groupBy("cell_id", "dim").agg(F.avg("val").alias("mean"))
-        crows = (
-            means.groupBy("cell_id")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "mean"))).alias("dm"))
-            .select(
-                "cell_id",
-                F.expr("transform(dm, x -> x.mean)").alias("centroid"),
-            )
-            .collect()
-        )
+        crows = _key_means(_assign_cells(vecs, None, crows=crows), "cell_id").collect()
     return _cents_df(vecs.sparkSession, crows)
 
 
@@ -526,6 +589,43 @@ def _cell_sims_sql(crows) -> str:
     )
 
 
+def _ivf_topk(
+    vecs: DataFrame,
+    cents: DataFrame,
+    cells: DataFrame,
+    nprobe: int | None,
+    n_queries: int | None,
+) -> DataFrame:
+    """The IVF listing body, whatever the quantizer: ``cents`` (cell_id,
+    centroid) are the coarse cells and ``cells`` (vec_id, cell_id, v) the
+    corpus assigned to them. Per query, the ``nprobe`` (default N_PROBE)
+    nearest cells by centroid cosine, ties to the lowest cell_id, are
+    probed, and only their vectors reach the exact top-k."""
+    queries = _queries(vecs, n_queries if n_queries is not None else N_QUERIES)
+    qc = (
+        F.broadcast(queries)
+        .crossJoin(F.broadcast(cents))
+        .select(
+            "query_id", "qv", "cell_id",
+            cosine("qv", "centroid").alias("cell_sim"),
+        )
+    )
+    wq = Window.partitionBy("query_id").orderBy(F.desc("cell_sim"), F.asc("cell_id"))
+    probes = (
+        qc.withColumn("cell_rk", F.row_number().over(wq))
+        .filter(F.col("cell_rk") <= (nprobe if nprobe is not None else N_PROBE))
+        .select("query_id", "qv", "cell_id")
+    )
+    cands = cells.select(
+        F.col("vec_id").alias("cand_id"), "cell_id", F.col("v").alias("cv")
+    )
+    return _exact_topk(
+        F.broadcast(probes)
+        .join(cands, "cell_id")
+        .filter(F.col("cand_id") != F.col("query_id"))
+    )
+
+
 def ivf_kmeans_topk_listing(
     spark: SparkSession,
     sf_dir: str,
@@ -541,41 +641,7 @@ def ivf_kmeans_topk_listing(
     override the module constants (clustered-fixture recall runs)."""
     vecs = _vectors(spark, sf_dir)
     cents = kmeans_centroids(vecs)
-    assigned = _assign_cells(vecs, cents)
-    n_probe = nprobe if nprobe is not None else N_PROBE
-    nq = n_queries if n_queries is not None else N_QUERIES
-
-    queries = vecs.filter(F.col("vec_id") < nq).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    qc = (
-        F.broadcast(queries)
-        .crossJoin(F.broadcast(cents))
-        .select(
-            "query_id", "qv", "cell_id",
-            cosine("qv", "centroid").alias("cell_sim"),
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("cell_sim"), F.asc("cell_id"))
-    probes = (
-        qc.withColumn("cell_rk", F.row_number().over(wq))
-        .filter(F.col("cell_rk") <= n_probe)
-        .select("query_id", "qv", "cell_id")
-    )
-    cands = assigned.select(
-        F.col("vec_id").alias("cand_id"), "cell_id", F.col("v").alias("cv")
-    )
-    sim = F.round(cosine("qv", "cv"), 6)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
-    return (
-        F.broadcast(probes)
-        .join(cands, "cell_id")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .select("query_id", "cand_id", sim.alias("cos_sim"))
-        .filter(F.col("cos_sim").isNotNull())  # zero-norm rows: see cosine()
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-    )
+    return _ivf_topk(vecs, cents, _assign_cells(vecs, cents), nprobe, n_queries)
 
 
 def ivf_topk_listing(
@@ -592,42 +658,8 @@ def ivf_topk_listing(
     ``similarity_topk_ivf`` recall verdict. ``nprobe`` overrides N_PROBE
     (the clustered-fixture recall measurements probe 2-3 cells)."""
     vecs = _vectors(spark, sf_dir)
-    cents = label_centroids(vecs)
-    n_probe = nprobe if nprobe is not None else N_PROBE
-    nq = n_queries if n_queries is not None else N_QUERIES
-
-    queries = vecs.filter(F.col("vec_id") < nq).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    qc = (
-        F.broadcast(queries)
-        .crossJoin(F.broadcast(cents))
-        .select(
-            "query_id",
-            "qv",
-            "cell_id",
-            cosine("qv", "centroid").alias("cell_sim"),
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("cell_sim"), F.asc("cell_id"))
-    probes = qc.withColumn("cell_rk", F.row_number().over(wq)).filter(
-        F.col("cell_rk") <= n_probe
-    ).select("query_id", "qv", "cell_id")
-
-    cands = vecs.select(
-        F.col("vec_id").alias("cand_id"), F.col("label").alias("cell_id"), F.col("v").alias("cv")
-    )
-    sim = F.round(cosine("qv", "cv"), 6)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
-    return (
-        F.broadcast(probes)
-        .join(cands, "cell_id")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .select("query_id", "cand_id", sim.alias("cos_sim"))
-        .filter(F.col("cos_sim").isNotNull())  # zero-norm rows: see cosine()
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-    )
+    cells = vecs.withColumnRenamed("label", "cell_id")
+    return _ivf_topk(vecs, label_centroids(vecs), cells, nprobe, n_queries)
 
 
 @query(
@@ -686,10 +718,11 @@ _IVF_VERDICT_ORACLE = (
 
 def _recall_verdict(exact: DataFrame, approx: DataFrame) -> DataFrame:
     """One-row (n_exact, recall_ok) verdict: what fraction of the exact
-    top-k listing the ANN listing recovered, checked against
-    ANN_RECALL_BOUND in-query (both counts are scalar aggregates — the
-    only 'collect-like' state is two longs)."""
-    hit = exact.join(approx, ["query_id", "cand_id"], "left_semi").agg(
+    listing's rows the ANN listing recovered, matched on all of
+    ``exact``'s columns (the (query_id, cand_id) or (vec_id, neighbor_id)
+    edge), checked against ANN_RECALL_BOUND in-query (both counts are
+    scalar aggregates — the only 'collect-like' state is two longs)."""
+    hit = exact.join(approx, exact.columns, "left_semi").agg(
         F.count("*").alias("n_hit")
     )
     tot = exact.agg(F.count("*").alias("n_exact"))
@@ -759,18 +792,8 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     by label. No all-pairs anything — cost is O(corpus · dim) + one window
     exchange, the same plan at 100 TB."""
     vecs = _vectors(spark, sf_dir)
-    means = (
-        vecs.select("label", F.posexplode("v").alias("dim", "val"))
-        .groupBy("label", "dim")
-        .agg(F.round(F.avg("val"), 4).alias("mean"))
-    )
-    cent = (
-        means.groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("dim", "mean"))).alias("dm"))
-        .select(
-            "label",
-            F.expr("transform(dm, x -> x.mean)").alias("centroid"),
-        )
+    cent = _key_means(vecs, "label").selectExpr(
+        "label", "transform(centroid, x -> round(x, 4)) AS centroid"
     )
     scored = vecs.join(F.broadcast(cent), "label").select(
         "vec_id",
@@ -845,10 +868,98 @@ def _pq_codebooks(vecs: DataFrame):
     import numpy as np
 
     rows = vecs.orderBy("vec_id").limit(PQ_TRAIN_CAP).select("v").collect()
-    X = np.array([r.v for r in rows], dtype=np.float64)
-    norms = np.linalg.norm(X, axis=1, keepdims=True)
-    X = X[norms[:, 0] > 0] / norms[norms[:, 0] > 0]
-    return _train_subspace_codebooks(X)
+    return _train_subspace_codebooks(
+        _unit_rows(np.array([r.v for r in rows], dtype=np.float64))[1]
+    )
+
+
+def _pq_encode(X, books):
+    """PQ codes of the rows of ``X`` against ``books`` (M, KSUB, dsub):
+    per subspace m, the index of the codeword nearest to ``X``'s m-th
+    dsub-wide slice (argmin ties to the lowest index), as uint8 (KSUB ≤
+    256). Returns (codes (n, M), qerr (n,)), where qerr is the squared
+    reconstruction error, the per-subspace minimum distances summed in
+    subspace order."""
+    import numpy as np
+
+    n_m, _, dsub = books.shape
+    codes = np.empty((len(X), n_m), dtype=np.uint8)
+    qerr = np.zeros(len(X))
+    for m in range(n_m):
+        S = X[:, m * dsub : (m + 1) * dsub]
+        d2 = ((S[:, None, :] - books[m][None, :, :]) ** 2).sum(axis=2)
+        codes[:, m] = d2.argmin(axis=1)
+        qerr += d2.min(axis=1)
+    return codes, qerr
+
+
+def _pq_decode(codes, books):
+    """The reconstruction of PQ ``codes``: row i is the concatenation over
+    m of ``books[m][codes[i, m]]``."""
+    import numpy as np
+
+    n_m, _, dsub = books.shape
+    return books[np.arange(n_m), codes].reshape(len(codes), n_m * dsub)
+
+
+def _unit_centroids(C):
+    """Coarse centroids scaled to unit norm for the numpy probes; the
+    1e-12 floor keeps a zero centroid at zero instead of NaN."""
+    import numpy as np
+
+    return C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
+
+
+def _probe_mask(cell_sims, n_probe: int):
+    """Boolean (query, cell) mask of each query's ``n_probe`` most similar
+    cells (``np.argsort`` order of the negated similarities) — the numpy
+    probe choice of the IVF∘PQ listings."""
+    import numpy as np
+
+    mask = np.zeros(cell_sims.shape, dtype=bool)
+    np.put_along_axis(
+        mask, np.argsort(-cell_sims, axis=1)[:, :n_probe], True, axis=1
+    )
+    return mask
+
+
+def _pq_pairs(query_id, cand_id, pq_score):
+    """The (query_id, cand_id, pq_score) frame of scored pairs with the
+    self-pairs dropped."""
+    import pandas as pd
+
+    keep = query_id != cand_id
+    return pd.DataFrame(
+        {
+            "query_id": query_id[keep],
+            "cand_id": cand_id[keep],
+            "pq_score": pq_score[keep],
+        }
+    )
+
+
+def _pq_rerank(vecs: DataFrame, scan: DataFrame, adc, shortlist: int) -> DataFrame:
+    """The second stage of every PQ listing. ``adc``, a ``mapInPandas``
+    kernel over ``scan``, emits approximate (query_id, cand_id, pq_score)
+    pairs; each query keeps its top ``shortlist`` under (pq_score at 6dp
+    desc, cand_id asc), and only those candidates' raw vectors are
+    fetched — a |queries|×shortlist relation, broadcast — for the exact
+    top-k (``_exact_topk``)."""
+    scored = scan.mapInPandas(adc, "query_id LONG, cand_id LONG, pq_score DOUBLE")
+    w_short = Window.partitionBy("query_id").orderBy(
+        F.desc(F.round("pq_score", 6)), F.asc("cand_id")
+    )
+    short = (
+        scored.withColumn("srk", F.row_number().over(w_short))
+        .filter(F.col("srk") <= shortlist)
+        .select("query_id", "cand_id")
+    )
+    cands = vecs.select(F.col("vec_id").alias("cand_id"), F.col("v").alias("cv"))
+    return _exact_topk(
+        cands.join(F.broadcast(short), "cand_id").join(
+            F.broadcast(_queries(vecs, N_QUERIES)), "query_id"
+        )
+    )
 
 
 def pq_topk_listing(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -860,51 +971,26 @@ def pq_topk_listing(spark: SparkSession, sf_dir: str) -> DataFrame:
        reconstructed codewords (at scale the encode is a one-off
        materialized 16-byte column and the scan reads codes only) →
        per-query top-PQ_SHORTLIST by approximate score.
-    2. Exact re-rank: raw vectors are fetched ONLY for shortlist members
-       (a |queries|×L relation — broadcast) and the final top-k uses true
-       cosine. Same window contract as every other listing.
+    2. Exact re-rank (``_pq_rerank``): raw vectors are fetched ONLY for
+       shortlist members (a |queries|×L relation — broadcast) and the
+       final top-k uses true cosine. Same window contract as every other
+       listing.
     """
     import numpy as np
     import pandas as pd
-
-    from pyspark.sql import types as T
 
     vecs = _vectors(spark, sf_dir)
     books = session_artifact(
         spark, ("pq_codebooks", sf_dir), lambda: _pq_codebooks(vecs)
     )  # (M, KSUB, dsub) — closed over, ~4 KB
-    qrows = vecs.filter(F.col("vec_id") < N_QUERIES).collect()
-    q_ids = np.array([r.vec_id for r in qrows])
-    Q = np.array([r.v for r in qrows], dtype=np.float64)
-    qn = np.linalg.norm(Q, axis=1, keepdims=True)
-    keep = qn[:, 0] > 0
-    q_ids, Qn = q_ids[keep], Q[keep] / qn[keep]
-    dim = Qn.shape[1]
-    dsub = dim // PQ_M
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("cand_id", T.LongType()),
-            T.StructField("pq_score", T.DoubleType()),
-        ]
-    )
+    q_ids, Qn = _query_matrix(vecs)
 
     def score(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue  # empty Arrow batch: shape-(0,) array breaks axis=1
-            X = np.array(list(pdf["v"]), dtype=np.float64)
-            ids = pdf["vec_id"].to_numpy()
-            norm = np.linalg.norm(X, axis=1, keepdims=True)
-            ok = norm[:, 0] > 0
-            X, ids = X[ok] / norm[ok], ids[ok]
-            # encode: per subspace, nearest codeword -> reconstruction
-            R = np.empty_like(X)
-            for m in range(PQ_M):
-                S = X[:, m * dsub : (m + 1) * dsub]
-                d2 = ((S[:, None, :] - books[m][None, :, :]) ** 2).sum(axis=2)
-                R[:, m * dsub : (m + 1) * dsub] = books[m][d2.argmin(axis=1)]
+            ok, X = _unit_rows(np.array(list(pdf["v"]), dtype=np.float64))
+            ids = pdf["vec_id"].to_numpy()[ok]
             # ADC + PER-BATCH PARTIAL TOP-PQ_SHORTLIST (VERDICT r06 item
             # 3): emitting the full |Q|×batch scored relation made the
             # downstream per-query window land N rows on each of |Q|
@@ -923,9 +1009,10 @@ def pq_topk_listing(spark: SparkSession, sf_dir: str) -> DataFrame:
             # away-from-zero on negative halves — but one half-up mode
             # module-wide beats mixing half-even in. The cut and the
             # downstream window use these same rounded values, so the
-            # partial-top-S proof is unaffected; the only registered
-            # consumer is the recall-bounded verdict.)
-            P = R @ Qn.T  # query · reconstructed candidate
+            # partial-top-S proof is unaffected: the window's 6dp
+            # rounding maps a value already on the 6dp grid to itself.
+            # The only registered consumer is the recall-bounded verdict.)
+            P = _pq_decode(_pq_encode(X, books)[0], books) @ Qn.T
             Sc = np.floor(P * 1e6 + 0.5) / 1e6
             frames = []
             for qi in range(len(q_ids)):
@@ -950,33 +1037,7 @@ def pq_topk_listing(spark: SparkSession, sf_dir: str) -> DataFrame:
             if frames:
                 yield pd.concat(frames, ignore_index=True)
 
-    scored = vecs.select("vec_id", "v").mapInPandas(score, schema=out_schema)
-    # pq_score arrives 6dp-rounded from the batch cut; ordering by it raw
-    # keeps the window's total order identical to the cut's
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.desc("pq_score"), F.asc("cand_id")
-    )
-    shortlist = (
-        scored.withColumn("srk", F.row_number().over(w_short))
-        .filter(F.col("srk") <= PQ_SHORTLIST)
-        .select("query_id", "cand_id")
-    )
-    # Exact re-rank of the shortlist: |queries|×L rows — broadcast against
-    # the corpus to fetch raw vectors, then broadcast the tiny query set.
-    queries = vecs.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    cands = vecs.select(F.col("vec_id").alias("cand_id"), F.col("v").alias("cv"))
-    sim = F.round(cosine("qv", "cv"), 6)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
-    return (
-        cands.join(F.broadcast(shortlist), "cand_id")
-        .join(F.broadcast(queries), "query_id")
-        .select("query_id", "cand_id", sim.alias("cos_sim"))
-        .filter(F.col("cos_sim").isNotNull())
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-    )
+    return _pq_rerank(vecs, vecs.select("vec_id", "v"), score, PQ_SHORTLIST)
 
 
 @query("similarity_topk_pq", oracle=_IVF_VERDICT_ORACLE)
@@ -1003,114 +1064,38 @@ def ivfpq_topk_listing(spark: SparkSession, sf_dir: str) -> DataFrame:
     |queries|×L shortlist. Unregistered listing; the driver-checked face
     is the ``similarity_topk_ivfpq`` recall verdict."""
     import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
 
     vecs = _vectors(spark, sf_dir)
     books = session_artifact(
         spark, ("pq_codebooks", sf_dir), lambda: _pq_codebooks(vecs)
     )
     # coarse quantizer state: k×dim label centroids, driver-side
-    crows = (
-        vecs.select("label", F.posexplode("v").alias("dim", "val"))
-        .groupBy("label", "dim")
-        .agg(F.avg("val").alias("m"))
-        .collect()
-    )
-    labels = sorted({r.label for r in crows})
-    dim = max(r.dim for r in crows) + 1
-    C = np.zeros((len(labels), dim))
-    lidx = {lb: i for i, lb in enumerate(labels)}
-    for r in crows:
-        C[lidx[r.label], r.dim] = r.m
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-
-    qrows = vecs.filter(F.col("vec_id") < N_QUERIES).collect()
-    q_ids = np.array([r.vec_id for r in qrows])
-    Q = np.array([r.v for r in qrows], dtype=np.float64)
-    qn = np.linalg.norm(Q, axis=1, keepdims=True)
-    keep = qn[:, 0] > 0
-    q_ids, Qn = q_ids[keep], Q[keep] / qn[keep]
+    crows = sorted(label_centroids(vecs).collect(), key=lambda r: r.cell_id)
+    labels = np.array([r.cell_id for r in crows], dtype=np.int64)
+    Cn = _unit_centroids(np.array([r.centroid for r in crows], dtype=np.float64))
+    q_ids, Qn = _query_matrix(vecs)
     # probe set per query: top-IVFPQ_N_PROBE cells by centroid cosine.
     # The composed path probes more cells than plain IVF (7/10 vs 5/10):
     # its end-to-end recall is bounded by probe recall × shortlist recall,
     # and on this isotropic corpus the probe ceiling is the binding term —
     # measured end-to-end 0.56 at sf0.1 with 5 probes vs the 0.5 driver
     # bound, too thin a margin for a verdict that must stay green.
-    cell_sims = Qn @ Cn.T
-    probes = {
-        int(q_ids[i]): {
-            labels[j] for j in np.argsort(-cell_sims[i])[:IVFPQ_N_PROBE]
-        }
-        for i in range(len(q_ids))
-    }
-    dsub = Qn.shape[1] // PQ_M
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("cand_id", T.LongType()),
-            T.StructField("pq_score", T.DoubleType()),
-        ]
-    )
+    probe = _probe_mask(Qn @ Cn.T, IVFPQ_N_PROBE)
 
     def score(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue  # empty Arrow batch: shape-(0,) array breaks axis=1
-            X = np.array(list(pdf["v"]), dtype=np.float64)
-            ids = pdf["vec_id"].to_numpy()
-            labs = pdf["label"].to_numpy()
-            norm = np.linalg.norm(X, axis=1, keepdims=True)
-            ok = norm[:, 0] > 0
-            X, ids, labs = X[ok] / norm[ok], ids[ok], labs[ok]
-            R = np.empty_like(X)
-            for m in range(PQ_M):
-                S = X[:, m * dsub : (m + 1) * dsub]
-                d2 = ((S[:, None, :] - books[m][None, :, :]) ** 2).sum(axis=2)
-                R[:, m * dsub : (m + 1) * dsub] = books[m][d2.argmin(axis=1)]
-            S = R @ Qn.T
-            out = pd.DataFrame(
-                {
-                    "query_id": np.repeat(q_ids, len(ids)),
-                    "cand_id": np.tile(ids, len(q_ids)),
-                    "cand_label": np.tile(labs, len(q_ids)),
-                    "pq_score": S.T.reshape(-1),
-                }
-            )
-            out = out[out.query_id != out.cand_id]
-            # probe mask: candidate's cell must be probed by this query
-            mask = [
-                lb in probes[int(qid)]
-                for qid, lb in zip(out.query_id, out.cand_label)
-            ]
-            yield out.loc[mask, ["query_id", "cand_id", "pq_score"]]
+            ok, X = _unit_rows(np.array(list(pdf["v"]), dtype=np.float64))
+            ids = pdf["vec_id"].to_numpy()[ok]
+            # probe filter: the candidate's cell must be probed by the query
+            rows = np.searchsorted(labels, pdf["label"].to_numpy()[ok])
+            qi, ci = np.nonzero(probe[:, rows])
+            S = _pq_decode(_pq_encode(X, books)[0], books) @ Qn.T
+            yield _pq_pairs(q_ids[qi], ids[ci], S[ci, qi])
 
-    scored = vecs.select("vec_id", "label", "v").mapInPandas(
-        score, schema=out_schema
-    )
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round("pq_score", 6)), F.asc("cand_id")
-    )
-    shortlist = (
-        scored.withColumn("srk", F.row_number().over(w_short))
-        .filter(F.col("srk") <= PQ_SHORTLIST)
-        .select("query_id", "cand_id")
-    )
-    queries = vecs.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    cands = vecs.select(F.col("vec_id").alias("cand_id"), F.col("v").alias("cv"))
-    sim = F.round(cosine("qv", "cv"), 6)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
-    return (
-        cands.join(F.broadcast(shortlist), "cand_id")
-        .join(F.broadcast(queries), "query_id")
-        .select("query_id", "cand_id", sim.alias("cos_sim"))
-        .filter(F.col("cos_sim").isNotNull())
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
+    return _pq_rerank(
+        vecs, vecs.select("vec_id", "label", "v"), score, PQ_SHORTLIST
     )
 
 
@@ -1346,31 +1331,21 @@ def knn_graph_ivf_listing(
     plan."""
     import numpy as np
 
-    from .annindex import KMEANS_TRAIN_PER_CELL
-
     vecs = _vectors(spark, sf_dir)
     # Quantizer trained on a KMEANS_TRAIN_PER_CELL-bounded subsample (r12,
     # VERDICT r11 item 4, guide §1/§5): the r11 shape ran label_centroids
     # over the FULL corpus — a |corpus|·dim posexplode feeding the (label,
     # dim) aggregate — inside the timed listing, profiled at ~55% of the
-    # key. A coarse quantizer is a TRAINED artifact: ~128 points per cell
-    # matches full-corpus training (annindex's measured band, FAISS
-    # guidance 39-256/centroid), so the build cost drops from O(corpus) to
-    # O(cells·128) while assignment/tiling stay corpus-wide and exact
-    # within probed cells. Deterministic hash-of-id sample (the r05
-    # doctrine: reproducible, id-domain-shape-independent). One bounded
-    # stats pass sizes the sample, which is small enough to train from on
-    # the driver; recall pins re-verified on the clustered fixture
-    # (tests/test_ivf_clustered.py) and the isotropic driver corpus
-    # (knn_graph_ivf's oracle verdict).
+    # key. With ~128 points per cell the build cost drops from O(corpus)
+    # to O(cells·128) while assignment/tiling stay corpus-wide and exact
+    # within probed cells. One bounded stats pass sizes the sample, which
+    # is small enough to train from on the driver; recall pins re-verified
+    # on the clustered fixture (tests/test_ivf_clustered.py) and the
+    # isotropic driver corpus (knn_graph_ivf's oracle verdict).
     stats = vecs.agg(
         F.count("*").alias("n"), F.approx_count_distinct("label").alias("nl")
     ).collect()[0]
-    cap = KMEANS_TRAIN_PER_CELL * max(int(stats.nl), 1)
-    train = vecs
-    if stats.n > cap:
-        step = max(2, int(stats.n) // cap)
-        train = vecs.filter(F.pmod(F.xxhash64("vec_id"), F.lit(step)) == 0)
+    train = _train_sample(vecs, int(stats.n), max(int(stats.nl), 1))
     crows = _label_means(train.select("label", "v").collect())
     assigned = _assign_cells(vecs, None, crows=crows)
     cid = np.array([r.cell_id for r in crows], dtype=np.int64)
@@ -1418,13 +1393,4 @@ def knn_graph_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx = knn_graph_ivf_listing(spark, sf_dir).select(
         "vec_id", "neighbor_id"
     )
-    hit = exact.join(approx, ["vec_id", "neighbor_id"], "left_semi").agg(
-        F.count("*").alias("n_hit")
-    )
-    tot = exact.agg(F.count("*").alias("n_exact"))
-    return tot.crossJoin(hit).select(
-        "n_exact",
-        (F.col("n_hit") >= ANN_RECALL_BOUND * F.col("n_exact")).alias(
-            "recall_ok"
-        ),
-    )
+    return _recall_verdict(exact, approx)

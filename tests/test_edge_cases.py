@@ -139,3 +139,25 @@ def test_pandas_similarity_zero_norm_matches_jvm(spark):
     assert 3 not in query_ids  # zero-norm query emits no results
     assert 7 not in cand_ids  # zero-norm candidate never ranks
     assert all(t[2] == t[2] for t in jvm)  # no NaN survived
+
+
+def test_empty_query_set_gives_empty_listings(spark):
+    """A corpus without any vec_id < N_QUERIES has no queries. The JVM
+    listing is then empty; the numpy listings must be empty too, not raise
+    numpy's AxisError on a shape-(0,) query matrix at call time."""
+    import random
+
+    rng = random.Random(7)
+    rows = [(i, i % 2, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(5, 12)]
+    fake = spark.createDataFrame(rows, "vec_id LONG, label INT, v ARRAY<DOUBLE>")
+
+    mp = pytest.MonkeyPatch()
+    try:
+        mp.setattr(S, "_vectors", lambda _s, _d: fake)
+        jvm = S.similarity_topk(spark, "no-queries").collect()
+        pd_ = S.similarity_topk_pandas(spark, "no-queries").collect()
+        pq = S.pq_topk_listing(spark, "no-queries").collect()
+        ivfpq = S.ivfpq_topk_listing(spark, "no-queries").collect()
+    finally:
+        mp.undo()
+    assert jvm == pd_ == pq == ivfpq == []
